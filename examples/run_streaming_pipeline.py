@@ -3,12 +3,14 @@
 JSON tick replay (≈ Pub/Sub subscription fed by the ingestion
 function's replay mode)
   -> watermarked 1-min tumbling aggregation (≈ FixedWindows(60))
-  -> 5-min sliding SMA stream              (≈ SlidingWindows(300,60))
-  -> stream-stream window join             (≈ CoGroupByKey)
+  -> 5-min/1-min sliding window over those minute rows, rebuilding
+     the SMA and keeping the minute that ends with the window
+     (≈ SlidingWindows(300,60) + CoGroupByKey, as one chained
+     aggregation instead of a stream-stream join)
 and, in parallel from the same source,
   -> fused stateful windowing + volume-spike detection
      (≈ DetectVolumeSpike BagStateSpec DoFn)
-  -> foreachBatch idempotent upsert sink   (≈ WriteToBigQuery
+  -> foreachBatch keyed upsert sink       (≈ WriteToBigQuery
      WRITE_APPEND; stateful output is update-mode, which append-only
      file sinks can't take directly)
 and finally the r10 table-format hop: the joined metrics land in an
@@ -22,10 +24,15 @@ Run: python examples/run_streaming_pipeline.py
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+# the Python workers the JVM starts import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (_REPO, os.environ.get("PYTHONPATH"))))
 
 from gcp_data_engineering_workshop_spark.session import get_spark
 from gcp_data_engineering_workshop_spark.sources.ticks import ticks
@@ -36,6 +43,16 @@ from gcp_data_engineering_workshop_spark.streaming.state import stateful_spike_s
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     spark = get_spark("streaming-demo")
+    try:
+        _run(spark, sf_dir)
+    finally:
+        # a failed step must not leave queries or the JVM running
+        for q in spark.streams.active:
+            q.stop()
+        spark.stop()
+
+
+def _run(spark, sf_dir: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out = tempfile.mkdtemp(prefix="stock_out_")
 
@@ -56,7 +73,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     q1.processAllAvailable(); q2.processAllAvailable()
     q1.stop(); q2.stop()
 
-    print("\n-- joined 1m metrics + SMA (stream-stream join, append mode) --")
+    print("\n-- joined 1m metrics + SMA (chained window aggregation, append mode) --")
     spark.table("joined_metrics").orderBy("ticker", "window_end") \
         .show(10, truncate=False)
     print(f"total joined windows emitted: {spark.table('joined_metrics').count()}")
@@ -96,7 +113,6 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     spark.table("silver").orderBy("ticker").show(10, truncate=False)
     print(f"bronze commits: {len(T.history(bronze))}, "
           f"txn watermark: {T.snapshot(bronze)['txn']}")
-    spark.stop()
 
 
 if __name__ == "__main__":

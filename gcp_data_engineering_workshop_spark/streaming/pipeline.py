@@ -36,14 +36,13 @@ def read_tick_stream(spark: SparkSession, path: str,
     return reader.json(path)
 
 
-def agg_1m_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """D2: watermarked 1-minute tumbling aggregation
-    (≈ FixedWindows(60) + 'Calculate 1-Min Aggs', pipeline.py:86-97).
-    Late data beyond the watermark is dropped instead of growing
-    state forever — the knob a 100 TB stream needs."""
-    t = ticks.withWatermark("ts", watermark)
+def _minute_aggs(ticks: DataFrame, watermark: str) -> DataFrame:
+    """The watermarked per-(ticker, minute) aggregation shared by D2
+    and D4: D2's public aggregates plus the exact per-minute price
+    sum and tick count the 5-minute SMA is rebuilt from."""
     return (
-        t.groupBy("ticker", F.window("ts", "1 minute").alias("win"))
+        ticks.withWatermark("ts", watermark)
+        .groupBy("ticker", F.window("ts", "1 minute").alias("win"))
         .agg(
             F.max_by("price", "ts").alias("latest_price"),
             F.max("price").alias("high_price_1m"),
@@ -52,12 +51,24 @@ def agg_1m_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
              .cast("double").alias("total_value_1m"),
             F.max_by("ai_sentiment", "ts").alias("ai_sentiment"),
             F.max_by("ai_summary", "ts").alias("ai_summary"),
+            F.sum(F.col("price").cast("decimal(18,4)")).alias("price_sum"),
+            F.count(F.lit(1)).alias("n_ticks"),
         )
-        .select("ticker", F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"),
-                "latest_price", "high_price_1m", "total_volume_1m",
-                "total_value_1m", "ai_sentiment", "ai_summary")
     )
+
+
+_MINUTE_COLS = ("latest_price", "high_price_1m", "total_volume_1m",
+                "total_value_1m", "ai_sentiment", "ai_summary")
+
+
+def agg_1m_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """D2: watermarked 1-minute tumbling aggregation
+    (≈ FixedWindows(60) + 'Calculate 1-Min Aggs', pipeline.py:86-97).
+    Late data beyond the watermark is dropped instead of growing
+    state forever — the knob a 100 TB stream needs."""
+    return _minute_aggs(ticks, watermark).select(
+        "ticker", F.col("win.start").alias("window_start"),
+        F.col("win.end").alias("window_end"), *_MINUTE_COLS)
 
 
 def sma_5m_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -102,14 +113,40 @@ def dedup_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
 
 def joined_metrics_stream(ticks: DataFrame,
                           watermark: str = "10 minutes") -> DataFrame:
-    """D4: stream-stream join of the two windowed aggregate streams
-    on (ticker, window_end) — the reference's CoGroupByKey topology
-    (pipeline.py:110-119). Spark 4 supports chaining the two stateful
-    window aggregations into an append-mode join; rows emit once both
-    windows finalize past the watermark."""
-    agg = agg_1m_stream(ticks, watermark)
-    sma = sma_5m_stream(ticks, watermark)
-    return agg.join(sma, ["ticker", "window_end"], "inner")
+    """D4: the 1-minute aggregates joined with the 5-minute SMA on
+    (ticker, window_end) — the reference's CoGroupByKey output
+    (pipeline.py:110-119) — as ONE chain of two stateful window
+    aggregations instead of a stream-stream join.
+
+    The first operator is D2's per-minute aggregation carrying the
+    exact price sum and tick count. The second groups those minute
+    rows into 5-minute windows sliding by 1 minute (the chained-window
+    pattern of D9) and rebuilds the SMA as sum of sums over sum of
+    counts, exactly like the batch twin ``with_sma_5m``. It also keeps
+    the minute row with the latest end; the window is emitted only
+    when that minute ends where the 5-minute window ends, which is
+    the inner join's row set. Each tick is aggregated once, with no
+    5x sliding-window expansion, and both operators evict their state
+    once the watermark passes a window's end.
+
+    Append mode only: a row is emitted once its 5-minute window closes
+    past the watermark. A checkpoint written by the earlier
+    stream-stream join plan cannot be resumed (its stateful operators
+    differ); restart such a query from a fresh checkpoint."""
+    minute = _minute_aggs(ticks, watermark)
+    last = F.max_by(F.struct("win", *_MINUTE_COLS), F.col("win.end"))
+    return (
+        minute.groupBy("ticker",
+                       F.window("win", "5 minutes", "1 minute").alias("w5"))
+        .agg(last.alias("m"),
+             (F.sum("price_sum").cast("double") / F.sum("n_ticks"))
+             .alias("sma_5m"))
+        .where(F.col("m.win.end") == F.col("w5.end"))
+        .select("ticker", F.col("w5.end").alias("window_end"),
+                F.col("m.win.start").alias("window_start"),
+                *[F.col(f"m.{c}").alias(c) for c in _MINUTE_COLS],
+                "sma_5m")
+    )
 
 
 def session_window_stream(events: DataFrame,
@@ -188,8 +225,8 @@ def purchase_attribution_stream(events: DataFrame,
                                 watermark: str = "10 minutes") -> DataFrame:
     """D13: watermarked stream-stream LEFT OUTER interval join —
     purchases attributed to a view by the same user within the
-    preceding 10 minutes. The outer side is the part inner joins
-    (D4) cannot express: a purchase with NO qualifying view still
+    preceding 10 minutes. The outer side is the part an inner join
+    cannot express: a purchase with NO qualifying view still
     emits (null view timestamp) once the watermark passes its join
     horizon, so unattributed conversions are never silently dropped.
     Both sides carry watermarks; the interval condition bounds the

@@ -4,10 +4,10 @@
 - memory_sink: test/debug sink with processAllAvailable semantics.
 - parquet_append_sink: WRITE_APPEND to a partitioned parquet table
   with checkpointing (exactly-once file sink).
-- foreach_batch_upsert: idempotent upsert via foreachBatch — the
-  pattern for sinks without native exactly-once (JDBC/warehouse):
-  each micro-batch deduplicates on key and overwrites only the
-  touched partitions.
+- foreach_batch_upsert: keyed upsert via foreachBatch — the pattern
+  for sinks without native exactly-once (JDBC/warehouse): each
+  micro-batch deduplicates on key and appends, stamped with its batch
+  id; readers take the keyed view.
 """
 
 from __future__ import annotations
@@ -35,9 +35,12 @@ def parquet_append_sink(df: DataFrame, path: str, checkpoint: str,
 
 def foreach_batch_upsert(df: DataFrame, path: str, checkpoint: str,
                          key_cols: tuple[str, ...]) -> StreamingQuery:
-    """Idempotent micro-batch upsert: batch rows are deduplicated on
-    the key (last write wins via max batch ordering) and appended;
-    replays of the same batch id are skipped by the checkpoint."""
+    """Keyed micro-batch upsert: each batch is deduplicated on the key
+    and appended with a ``_batch_id`` column. The raw output is
+    at-least-once: a batch replayed after a crash between the write
+    and the checkpoint commit is appended again. The keyed view
+    (dedupe on ``key_cols``, latest ``_batch_id`` wins) is
+    exactly-once."""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         (batch.dropDuplicates(list(key_cols))

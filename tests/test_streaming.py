@@ -153,20 +153,60 @@ def test_salted_agg_equals_plain(spark, sf_dir):
     assert got == want
 
 
-def test_stream_stream_join_matches_batch(spark, sf_dir, tick_json_dir):
+def test_chained_sma_join_matches_batch_with_bounded_state(
+        spark, sf_dir, tick_json_dir, tmp_path):
+    """D4 drained one feed file per trigger: every emitted row equals
+    its batch twin on every column, every window the final watermark
+    closed is emitted, and the stateful operators hold only the open
+    windows instead of everything ever ingested."""
+    import datetime as dt
+    import glob
+    import time
+
     from gcp_data_engineering_workshop_spark.operators.windows import join_metrics
-    stream = spl.read_tick_stream(spark, tick_json_dir)
-    _run_to_memory(spl.joined_metrics_stream(stream), "joined_ss")
+    feed = str(tmp_path / "feed")
+    os.makedirs(feed)
+    lines = []
+    for f in sorted(glob.glob(os.path.join(tick_json_dir, "part-*.json"))):
+        with open(f) as fh:
+            lines += fh.readlines()
+    n_files = 3
+    per = -(-len(lines) // n_files)
+    t0 = time.time() - 10
+    for i in range(n_files):
+        path = os.path.join(feed, f"part-{i}.json")
+        with open(path, "w") as fh:
+            fh.writelines(lines[i * per:(i + 1) * per])
+        os.utime(path, (t0 + i, t0 + i))  # replay in event-time order
+
+    stream = spl.read_tick_stream(spark, feed, max_files_per_trigger=1)
+    q = sinks.memory_sink(spl.joined_metrics_stream(stream), "joined_ss")
+    q.processAllAvailable()
+    progress = q.recentProgress
+    q.stop()
+
     got = {(r.ticker, r.window_end): r for r in spark.table("joined_ss").collect()}
-    base = tumbling_1m(batch_ticks(spark, sf_dir))
+    ticks = batch_ticks(spark, sf_dir)
+    base = tumbling_1m(ticks)
     want = {(r.ticker, r.window_end): r
             for r in join_metrics(base, with_sma_5m(base)).collect()}
-    # append mode emits only watermark-finalized windows: subset of batch
     assert set(got) <= set(want)
-    assert len(got) >= 0.9 * len(want)
+    cols = spark.table("joined_ss").columns
     for k, g in got.items():
-        assert g.sma_5m == pytest.approx(want[k].sma_5m)
-        assert g.total_volume_1m == want[k].total_volume_1m
+        assert all(getattr(g, c) == getattr(want[k], c) for c in cols), k
+    wm = ticks.agg(F.max("ts")).first()[0] - dt.timedelta(minutes=10)
+    assert {k for k in want if k[1] <= wm} <= set(got)
+
+    # open state per ticker: <= 11 one-minute windows past the
+    # watermark plus <= 4 five-minute windows still collecting them
+    n_tickers = len({k[0] for k in want})
+    bound = n_tickers * (10 + 5)
+    assert sum(p["numInputRows"] > 0 for p in progress) >= n_files
+    for p in progress:
+        held = sum(o["numRowsTotal"] for o in p["stateOperators"])
+        assert held <= p["numInputRows"] + bound, (p["batchId"], held)
+    assert sum(o["numRowsTotal"]
+               for o in progress[-1]["stateOperators"]) <= bound
 
 
 def test_rate_generator_shape(spark):
