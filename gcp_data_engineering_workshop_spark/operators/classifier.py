@@ -21,8 +21,6 @@ column expression (JVM sigmoid), zero Python.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,8 +28,7 @@ from pyspark.sql import functions as F
 # logistic_fit routes through a single driver-local numpy loop when
 # n * (dim + 1) stays at or below this bound (the kmeans gate's
 # principle — operators/clustering.py). 0 disables the local path.
-_LOGREG_LOCAL_SCALARS = int(os.environ.get(
-    "SPARK_GRAFT_LOGREG_LOCAL_SCALARS", str(8_000_000)))
+_LOGREG_LOCAL_SCALARS = 8_000_000
 
 
 def logistic_fit(feats: DataFrame, dim: int, n_iter: int = 5,

@@ -26,8 +26,6 @@ Scale posture:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,8 +37,7 @@ _ASSIGN_SCHEMA = "vec_id bigint, cluster_id int, d2 double"
 # n * dim stays at or below this bound (64 MB of float64 at the
 # default) — see the kmeans_fit docstring for the exactness
 # argument. 0 disables the local path entirely.
-_KMEANS_LOCAL_SCALARS = int(os.environ.get(
-    "SPARK_GRAFT_KMEANS_LOCAL_SCALARS", str(8_000_000)))
+_KMEANS_LOCAL_SCALARS = 8_000_000
 
 
 def _d2_matrix(X: np.ndarray, cent: np.ndarray) -> np.ndarray:
@@ -153,7 +150,7 @@ def kmeans_fit(emb: DataFrame, k: int = 8, n_iter: int = 5,
 
     SIZE-GATED LOCAL PATH (r15 optimization, the connected-
     components gate's principle): when the embedding matrix fits
-    one driver buffer (n * dim <= SPARK_GRAFT_KMEANS_LOCAL_SCALARS,
+    one driver buffer (n * dim <= _KMEANS_LOCAL_SCALARS,
     default 8M scalars = 64 MB float64; 0 disables), ONE Arrow
     collect pulls it and all n_iter Lloyd rounds run in numpy —
     identical E-step (_d2_matrix argmin, unrounded, first-min

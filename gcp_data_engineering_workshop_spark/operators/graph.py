@@ -40,12 +40,8 @@ _cc_run_ids = itertools.count()
 # job instead of ~2 jobs x O(log diameter) rounds; past the bound the
 # distributed loop below is unchanged. Deterministic either way —
 # component = min node id is a unique fixed point, so both paths
-# produce identical rows. Override via SPARK_GRAFT_CC_LOCAL_EDGES
-# (0 disables the local path entirely).
-import os
-
-_CC_LOCAL_EDGE_BOUND = int(os.environ.get(
-    "SPARK_GRAFT_CC_LOCAL_EDGES", str(5_000_000)))
+# produce identical rows. 0 disables the local path entirely.
+_CC_LOCAL_EDGE_BOUND = 5_000_000
 
 
 def _cc_local_labels(batches):

@@ -827,13 +827,11 @@ def txlog_stats_prune_scan(spark: SparkSession,
                                             None))
     assert vec and all("o_bucket=2" in p for p in vec), \
         ("partition-token pruning must keep only bucket 2", vec)
-    prev = T._VECTOR_PRUNE
-    try:
-        T._VECTOR_PRUNE = False
-        slow = sorted(T._files_possibly_matching(snap, conj, root,
-                                                 None))
-    finally:
-        T._VECTOR_PRUNE = prev
+    # the per-file reference: the same snapshot with a plain-dict
+    # file map, which _files_possibly_matching never vectorizes
+    slow = sorted(T._files_possibly_matching(
+        {**snap, "files": dict(snap["files"].items())}, conj, root,
+        None))
     assert vec == slow, ("vectorized survivors must equal the "
                          "per-file loop", vec, slow)
     return (spark.read.format("txlog").load(root)

@@ -20,8 +20,7 @@ from gcp_data_engineering_workshop_spark.operators import similarity as S
 # driver-local int64 numpy loop when the kNN edge list (k * n rows)
 # is at or below this bound — exact arithmetic, so the local and
 # distributed rounds are bit-identical. 0 disables the local path.
-_PR_LOCAL_EDGE_BOUND = int(os.environ.get(
-    "SPARK_GRAFT_PAGERANK_LOCAL_EDGES", str(5_000_000)))
+_PR_LOCAL_EDGE_BOUND = 5_000_000
 
 
 def _docs(spark, sf_dir):

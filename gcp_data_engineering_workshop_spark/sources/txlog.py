@@ -281,7 +281,7 @@ class _CpStore:
         self._paths = None  # list[str] once materialized
         self._idx = None    # {path: row_no} once materialized
         self._parsed: dict[int, dict] = {}   # row_no -> meta dict
-        self._overlay: dict[str, dict] = {}  # distributed-prune
+        self._overlay: dict[str, dict] = {}  # prune-survivor
         # prefetch: path -> meta, lets a pruned plan resolve its
         # few survivors without materializing the 1M-path index
         self._stats_tbl = None  # stats-only projection (r14)
@@ -448,8 +448,7 @@ _CP_STORES_BYTES = 256 * 1024 * 1024
 # string-heavy projections — 32 MB here bounds the resident form
 # at roughly 64 MB of arrow (1M files measured 45 MB footer /
 # 89 MB arrow, streams correctly).
-_CP_STREAM_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_TXLOG_STREAM_BYTES", 32 * 1024 * 1024))
+_CP_STREAM_BYTES = 32 * 1024 * 1024
 # Survivor-fetch regime split for the streamed vectorized prune: at
 # or below this many survivors (or n/4 if larger) a row-group-
 # targeted take fetches path+meta; above it a sequential filtered
@@ -2467,25 +2466,13 @@ def read(spark, root: str, version: int | None = None,
     return _read_files(spark, root, snap, sorted(snap["files"]))
 
 
-# Max boolean columns per membership-aggregate pass (the FALLBACK
-# path for huge distinct-key sets). A million-file table runs
-# ceil(n_files / batch) bounded-width aggregates over the (cached)
-# distinct update keys instead of one pathologically wide plan
-# (VERDICT r9 What's-wrong #3). Kept small: Catalyst analysis +
-# codegen of the aggregate grow superlinearly in expression count —
-# a 1024-column pass measured ~20 s of pure planning at 1000 files
-# (PLANS.md r10), a 128-column pass stays in the planner's
-# comfortable range.
-_STAT_AGG_BATCH = 128
-
-# Distinct update keys up to this bound collect to the driver and
-# the file-range membership test runs as sorted-keys bisect per
-# file — n_files * log(n_keys) C-level compares, type-exact
-# (Python ints never round through float64, unlike a numpy
-# searchsorted), and ZERO Spark jobs per file batch. A daily 0.1%
-# upsert's key set fits comfortably; beyond the bound the batched
-# distributed aggregate takes over. Tests set 0 to force the
-# fallback.
+# Distinct update keys up to this bound collect to the driver as a
+# sorted list and each file's [lo, hi] tests against it —
+# searchsorted over the checkpoint's stat columns, bisect per file
+# elsewhere (type-exact: Python ints never round through float64).
+# A daily 0.1% upsert's key set fits comfortably; beyond the bound
+# the key column ships a _KeyDigest instead. Tests set 0 to force
+# the digest.
 _KEY_COLLECT_BOUND = 2_000_000
 
 # The row bound alone is blind to key WIDTH (VERDICT r11 #5): 2M
@@ -2494,7 +2481,7 @@ _KEY_COLLECT_BOUND = 2_000_000
 # x (sampled average key length + per-object Python overhead for
 # strings; a flat 32 B for fixed-width types). 64 MB keeps the
 # 2M-int behavior exactly while wide string keys fall back to the
-# distributed aggregate at the row count their width earns.
+# digest at the row count their width earns.
 _KEY_COLLECT_BYTES = 64 * 1024 * 1024
 _KEY_PYOBJ_OVERHEAD = 56  # CPython str header + list slot, approx
 
@@ -2543,9 +2530,9 @@ _KEY_DIGEST_BUCKETS = 1 << 18
 class _KeyDigest:
     """Bounded digest of a merge's distinct keys for ONE column —
     the over-collect-gate regime (VERDICT r13 #4): when the
-    distinct key set exceeds the collect gate, executors test each
-    file's [lo, hi] against a VALUE-RANGE bucket bitmap instead of
-    the driver falling back to O(files) batched aggregates.
+    distinct key set exceeds the collect gate, each file's [lo, hi]
+    tests against a VALUE-RANGE bucket bitmap instead of the
+    collected keys.
 
     Construction: a MONOTONE projection to float64 (identity for
     numbers; big-endian first-8-bytes for strings — truncation +
@@ -2648,7 +2635,7 @@ def _key_digest(updates: DataFrame, key: str) -> "_KeyDigest | None":
     bounded Spark jobs (min/max/has-NaN agg + distinct-bucket
     collect), never collecting the keys themselves. Returns None
     for domains without a monotone projection (exotic types) —
-    the caller's legacy fallback stands."""
+    that key column then gets no test (it cannot exclude)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -2733,9 +2720,7 @@ def _key_digest(updates: DataFrame, key: str) -> "_KeyDigest | None":
 def _collectable_keys(updates: DataFrame, key: str):
     """(sorted non-NaN key list, has_nan) when the distinct key set
     passes the collect gate (_key_collect_ok: row count AND
-    estimated bytes), else (None, has_nan_unknown=False). Factored
-    from _files_touching_keys_col so the distributed merge-prune
-    job can ship the same bounded list."""
+    estimated bytes), else (None, has_nan_unknown=False)."""
     from pyspark.sql import functions as F
 
     ks_df = updates.select(F.col(key).alias("_k")).distinct()
@@ -2765,8 +2750,9 @@ def _merge_touch_test(m: dict, col_tests: list[tuple],
                       root_abs: str | None, basename: str,
                       types: dict | None = None,
                       inv: dict | None = None) -> bool:
-    """ONE file's conjunctive merge-touch test — shared by the
-    distributed checkpoint job and the driver suffix loop.
+    """ONE file's conjunctive merge-touch test — the exact
+    re-verify behind the vectorized checkpoint pass, and the whole
+    test for log-suffix adds and plain-dict snapshots.
     ``col_tests`` = [(key, phys_key, sorted_keys, has_nan,
     is_float, blooming)]: the file is touched only if EVERY key
     column's footer range intersects some update key (missing
@@ -2774,8 +2760,8 @@ def _merge_touch_test(m: dict, col_tests: list[tuple],
     can still prove a range-hit absent). ``types``/``inv`` turn on
     the EFFECTIVE-stats view (partition tokens as exact [v, v]
     ranges, physical->logical re-keying) so partitioned and
-    column-mapped tables prune identically to the driver's
-    materialized view."""
+    column-mapped tables prune through the same view as the
+    vectorized pass."""
     import bisect
 
     stats = (_effective_stats(m, types, inv)
@@ -2815,46 +2801,116 @@ def _merge_touch_test(m: dict, col_tests: list[tuple],
     return True
 
 
-# Above this many coarse-surviving checkpoint rows the vectorized
-# merge prune hands back to the Spark-job regime: the exact
-# per-survivor re-verify (meta parse + bloom probes) is driver-side
-# and must stay bounded.
-_MERGE_VEC_SURVIVOR_BOUND = 100_000
-
-
 def _merge_touch_vec(store: "_CpStore", col_tests: list[tuple],
                      root_abs: str | None,
                      types: dict | None, inv: dict | None):
     """IN-PROCESS vectorized merge touch test over a stats_parsed
-    checkpoint (r14, the merge twin of _cp_vector_prune): numeric
-    key columns evaluate as np.searchsorted (sorted-list regime) or
-    a cumulative-sum bucket probe (digest regime) over the
-    checkpoint's stat columns — no Spark job; the coarse survivors
-    then re-verify through the EXACT per-file _merge_touch_test
-    (which also covers string-keyed columns this pass skips, and
-    bloom refinement, both bounded by the survivor count). Returns
-    the touched checkpoint paths, or None when no numeric column is
-    vectorizable / survivors exceed the re-verify bound (the
-    Spark-job regime stands).
+    checkpoint (the merge twin of _cp_vector_prune): each key
+    column's test evaluates as a coarse mask over the checkpoint's
+    stat columns — np.searchsorted for collected sorted keys
+    (numbers, or strings as a numpy 'U' array: code-point order,
+    the same order bisect uses), a cumulative-sum bucket probe for
+    a numeric digest, the [kmin, kmax] UTF-8 byte-range test for a
+    string digest. The coarse survivors then re-verify through the
+    EXACT per-file _merge_touch_test (bloom refinement, and any
+    column the coarse pass skips). Returns the touched checkpoint
+    paths, or None when the checkpoint has no stat columns or no
+    key column is vectorizable (the caller runs the per-file test
+    over every entry).
 
     Soundness: every compare rides a MONOTONE conversion (int64 ->
-    float64 rounds to nearest but preserves order, and the digest's
-    build-side projection is the same float64 grid), NULL stat
-    cells conservatively fill with an always-hit range, and the
-    final answer comes from the exact test — the vector pass can
-    only over-keep, never over-prune."""
+    float64 rounds to nearest but preserves order, the digest's
+    build-side projection is the same float64 grid, string prefix
+    truncation and numpy's trailing-NUL strip never reverse an
+    order), NULL stat cells never exclude, and the final answer
+    comes from the exact test — the vector pass can only
+    over-keep, never over-prune."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     if not store.has_stats():
         return None
+    # string compares run on code-point prefixes of this length on
+    # both sides: bounds the 'U' arrays (4 bytes per char per row)
+    # whatever the key or stat width
+    str_prefix = 32
+
+    def _to_np(arr, fill):
+        return pc.fill_null(arr, fill).combine_chunks() \
+            .to_numpy(zero_copy_only=False)
+
+    def _str_excl(ks, lo, hi):
+        """Coarse exclusion mask for string stats, or None."""
+        if isinstance(ks, _KeyDigest):
+            if ks.kind != "str" or not ks.enc_exact:
+                return None
+            # unsigned byte order == code-point order (the digest's
+            # kmin/kmax live in the UTF-8 binary domain)
+            return _to_np(pc.or_(
+                pc.less(pc.cast(hi, pa.binary()),
+                        pa.scalar(ks.kmin, pa.binary())),
+                pc.greater(pc.cast(lo, pa.binary()),
+                           pa.scalar(ks.kmax, pa.binary()))), False)
+        if not isinstance(ks[0], str):
+            return None
+        ks_np = np.array([k[:str_prefix] for k in ks], dtype=str)
+        lo_np = _to_np(pc.utf8_slice_codeunits(lo, 0, str_prefix),
+                    "").astype(str)
+        hi_np = _to_np(pc.utf8_slice_codeunits(hi, 0, str_prefix),
+                    "").astype(str)
+        return _sorted_miss(ks_np, lo_np, hi_np)
+
+    def _sorted_miss(ks_np, lo_np, hi_np):
+        """True where no sorted key lands in [lo, hi]."""
+        idx = np.searchsorted(ks_np, lo_np, side="left")
+        hit = np.zeros(len(lo_np), dtype=bool)
+        inb = idx < len(ks_np)
+        hit[inb] = ks_np[idx[inb]] <= hi_np[inb]
+        return ~hit
+
+    def _num_excl(ks, lo, hi):
+        """Coarse exclusion mask for numeric stats, or None."""
+        lo_np, hi_np = _to_np(lo, 0), _to_np(hi, 0)
+        if lo_np.dtype.kind not in "if" \
+                or hi_np.dtype.kind not in "if":
+            return None
+        if isinstance(ks, _KeyDigest):
+            if ks.kind != "num":
+                return None
+            lo_f = lo_np.astype("float64")
+            hi_f = hi_np.astype("float64")
+            coarse = (hi_f < ks.kmin) | (lo_f > ks.kmax)
+            if ks.w == 0.0:
+                return coarse
+            nb = len(ks.bits)
+            b0 = np.clip(np.floor(
+                (lo_f - ks.pmin) / ks.w).astype("int64"), 0, nb - 1)
+            b1 = np.clip(np.floor(
+                (hi_f - ks.pmin) / ks.w).astype("int64"), 0, nb - 1)
+            cs = np.concatenate(
+                ([0], np.cumsum(ks.bits, dtype="int64")))
+            no_key = (cs[b1 + 1] - cs[b0]) == 0
+            return coarse | (~coarse & (b1 >= b0) & no_key)
+        ks_np = np.asarray(ks)
+        if ks_np.ndim != 1 or ks_np.dtype.kind not in "if":
+            return None  # strings / huge ints / exotic values
+        if len({ks_np.dtype.kind, lo_np.dtype.kind,
+                hi_np.dtype.kind}) > 1:
+            # mixed int/float domains: exact only below 2**53
+            vals = [np.abs(ks_np).max(), np.abs(lo_np).max(),
+                    np.abs(hi_np).max()]
+            if max(float(v) for v in vals) >= 2.0 ** 53:
+                return None
+            ks_np = ks_np.astype("float64")
+            lo_np = lo_np.astype("float64")
+            hi_np = hi_np.astype("float64")
+        return _sorted_miss(ks_np, lo_np, hi_np)
 
     def _excl_for(tbl):
         """(excl mask, usable) over ONE stats slice — the resident
         projection or one streamed row group."""
         names = set(tbl.schema.names)
-        n = tbl.num_rows
         excl = None
         usable = False
         for key, pcol, ks, has_nan, is_float, _bl in col_tests:
@@ -2864,80 +2920,22 @@ def _merge_touch_vec(store: "_CpStore", col_tests: list[tuple],
                                    types or {})
             if lo is None or hi is None:
                 continue
-            if (pa.types.is_string(lo.type)
+            if (ks.empty if isinstance(ks, _KeyDigest) else not ks):
+                c = np.ones(tbl.num_rows, dtype=bool)  # zero keys:
+                # every stat-bearing file provably untouched
+            elif (pa.types.is_string(lo.type)
+                    and pa.types.is_string(hi.type)):
+                c = _str_excl(ks, lo, hi)
+            elif (pa.types.is_string(lo.type)
                     or pa.types.is_string(hi.type)):
-                continue  # string stats: exact re-verify covers
+                c = None  # mixed stat domains: re-verify decides
+            else:
+                c = _num_excl(ks, lo, hi)
+            if c is None:
+                continue
             valid = pc.and_(pc.is_valid(lo), pc.is_valid(hi))
-            valid_np = valid.combine_chunks().to_numpy(
+            c = c & valid.combine_chunks().to_numpy(
                 zero_copy_only=False)
-            lo_np = pc.fill_null(lo, 0).combine_chunks() \
-                .to_numpy(zero_copy_only=False)
-            hi_np = pc.fill_null(hi, 0).combine_chunks() \
-                .to_numpy(zero_copy_only=False)
-            if lo_np.dtype.kind not in "if" \
-                    or hi_np.dtype.kind not in "if":
-                continue
-            if isinstance(ks, _KeyDigest):
-                if ks.kind != "num":
-                    continue  # string digest: re-verify can't
-                    # help either (no key values) — but other
-                    # columns may
-                if ks.empty:
-                    c = valid_np.copy()  # zero keys: every stat-
-                    excl = (c if excl is None  # bearing file
-                            else (excl | c))  # provably untouched
-                    usable = True
-                    continue
-                lo_f = lo_np.astype("float64")
-                hi_f = hi_np.astype("float64")
-                coarse = (hi_f < ks.kmin) | (lo_f > ks.kmax)
-                if ks.w == 0.0:
-                    c = valid_np & coarse
-                else:
-                    nb = len(ks.bits)
-                    b0 = np.clip(np.floor(
-                        (lo_f - ks.pmin) / ks.w).astype("int64"),
-                        0, nb - 1)
-                    b1 = np.clip(np.floor(
-                        (hi_f - ks.pmin) / ks.w).astype("int64"),
-                        0, nb - 1)
-                    cs = np.concatenate(
-                        ([0], np.cumsum(ks.bits, dtype="int64")))
-                    no_key = (cs[b1 + 1] - cs[b0]) == 0
-                    c = valid_np & (
-                        coarse | (~coarse & (b1 >= b0) & no_key))
-                excl = c if excl is None else (excl | c)
-                usable = True
-                continue
-            # sorted-key-list regime
-            if not ks:
-                c = valid_np.copy()
-                excl = c if excl is None else (excl | c)
-                usable = True
-                continue
-            if isinstance(ks[0], str):
-                continue  # string keys: exact re-verify covers
-            ks_np = np.asarray(ks)
-            if ks_np.dtype.kind not in "if":
-                continue  # huge ints fell to object dtype: skip
-            if len({ks_np.dtype.kind, lo_np.dtype.kind,
-                    hi_np.dtype.kind}) > 1:
-                # mixed int/float domains: exact only below 2**53
-                cap = 2.0 ** 53
-                vals = [np.abs(ks_np).max()]
-                if valid_np.any():
-                    vals.append(np.abs(lo_np[valid_np]).max())
-                    vals.append(np.abs(hi_np[valid_np]).max())
-                if max(float(v) for v in vals) >= cap:
-                    continue
-                ks_np = ks_np.astype("float64")
-                lo_np = lo_np.astype("float64")
-                hi_np = hi_np.astype("float64")
-            idx = np.searchsorted(ks_np, lo_np, side="left")
-            hit = np.zeros(n, dtype=bool)
-            inb = idx < len(ks_np)
-            hit[inb] = ks_np[idx[inb]] <= hi_np[inb]
-            c = valid_np & ~hit
             excl = c if excl is None else (excl | c)
             usable = True
         return excl, usable
@@ -2957,10 +2955,7 @@ def _merge_touch_vec(store: "_CpStore", col_tests: list[tuple],
         return None
     keep = (keeps[0] if len(keeps) == 1
             else np.concatenate(keeps))
-    n_keep = int(keep.sum())
-    if n_keep > _MERGE_VEC_SURVIVOR_BOUND:
-        return None  # unselective: the Spark-job regime scales
-    if n_keep == 0:
+    if not keep.any():
         return []
     if store._tbl is not None:
         kept = store.table().select(["path", "meta"]) \
@@ -2980,12 +2975,14 @@ def _merge_touch_vec(store: "_CpStore", col_tests: list[tuple],
 
 
 # Diagnostic record of the LAST merge touch-test plan (VERDICT r14
-# #7): which regime planned it ("vectorized" in-process stats pass /
-# "spark-job" executor scan / "driver-loop" small-table or legacy
-# fallback), per-key key-set regime ("keys" = collected sorted list,
-# "digest" = over-gate value-range digest, "exotic" = no monotone
-# projection -> legacy), and the survivor count. Read it after a
-# merge/delete/update to see the plan shape of a slow 100-TB merge:
+# #7): which path planned it ("vectorized" = the stats_parsed pass
+# over the checkpoint plus the per-file test over the log suffix,
+# "driver-loop" = the per-file test over every entry: no columnar
+# checkpoint, no stat columns, or no vectorizable key column), the
+# per-key key-set regime ("keys" = collected sorted list, "digest" =
+# over-gate value-range digest, "exotic" = no monotone projection,
+# the column cannot exclude), and the touched-file count. Read it
+# after a merge/delete/update to see the plan shape of a slow merge:
 #     txlog.last_merge_plan()  ->  dict | None
 _LAST_MERGE_PLAN: dict | None = None
 
@@ -2997,95 +2994,6 @@ def last_merge_plan() -> dict | None:
     return _LAST_MERGE_PLAN
 
 
-def _files_touching_keys_dist(spark, files: "_LazyFiles",
-                              updates: DataFrame, keys: list[str],
-                              snap_root: str | None,
-                              bloom_cols: set,
-                              colmap: dict,
-                              types: dict | None = None,
-                              inv: dict | None = None
-                              ) -> list[str] | None:
-    """Distributed merge-prune over a COLUMNAR checkpoint (r13):
-    when the merge key sets pass the collect gate, ONE Spark job
-    over the checkpoint parquet evaluates the conjunctive
-    range+bloom touch test executor-side (key lists ship as a
-    broadcast, sidecars read where the files live), and the driver
-    evaluates only the log suffix — a bounded daily upsert against
-    a million-file table plans O(touched + suffix) driver-side
-    instead of parsing a million metas. Returns None when any key
-    column's distinct set exceeds the collect gate (the caller's
-    batched-aggregate regime takes over, honestly O(files))."""
-    global _LAST_MERGE_PLAN
-    key_regimes: dict[str, str] = {}
-    col_tests: list[tuple] = []
-    for k in keys:
-        ks, has_nan = _collectable_keys(updates, k)
-        if ks is None:
-            # over the collect gate: ship a bounded VALUE-RANGE
-            # digest instead of falling back to the O(files)
-            # driver aggregates (VERDICT r13 #4); conservative-only
-            # (a digest can over-touch, never under-touch)
-            dg = _key_digest(updates, k)
-            if dg is None:
-                key_regimes[k] = "exotic"
-                _LAST_MERGE_PLAN = {"regime": "driver-loop",
-                                    "key_regimes": key_regimes,
-                                    "survivors": None}
-                return None  # exotic key domain: legacy fallback
-            ks, has_nan = dg, dg.has_nan
-        key_regimes[k] = ("digest" if isinstance(ks, _KeyDigest)
-                          else "keys")
-        dt = updates.schema[k].dataType.simpleString()
-        col_tests.append((
-            k, (colmap or {}).get(k, k), ks, has_nan,
-            dt in ("float", "double"),
-            k in (bloom_cols or ())
-            and not isinstance(ks, _KeyDigest)))
-    store = files._store
-    root_abs = (os.path.abspath(snap_root)
-                if snap_root is not None else None)
-    ti, iv = ((dict(types) if types is not None else None),
-              (dict(inv) if inv is not None else None))
-    # stats_parsed fast path (r14): the touch test vectorizes
-    # IN-PROCESS over the checkpoint's stat columns — no Spark job;
-    # exact per-file re-verify bounded by the coarse survivors
-    kept = (_merge_touch_vec(store, col_tests, root_abs, ti, iv)
-            if _VECTOR_PRUNE else None)
-    regime = "vectorized" if kept is not None else "spark-job"
-    if kept is None:
-        _ship_package(spark)
-        b_tests = spark.sparkContext.broadcast(col_tests)
-
-        def _scan(batches):
-            import pandas as _pd
-            tests = b_tests.value
-            for pdf in batches:
-                kp = []
-                for p, mj in zip(pdf["path"], pdf["meta"]):
-                    if _merge_touch_test(json.loads(mj), tests,
-                                         root_abs,
-                                         os.path.basename(p),
-                                         ti, iv):
-                        kp.append(p)
-                yield _pd.DataFrame({"path": kp})
-
-        rows = (spark.read.parquet(store.path)
-                .select("path", "meta")  # stat cols stay columnar
-                .mapInPandas(_scan, "path string").collect())
-        b_tests.unpersist()
-        kept = [r["path"] for r in rows]
-    dead = files._removed | set(files._added)
-    touched = [p for p in kept if p not in dead]
-    touched.extend(
-        p for p, m in files._added.items()
-        if _merge_touch_test(m, col_tests, root_abs,
-                             os.path.basename(p), ti, iv))
-    _LAST_MERGE_PLAN = {"regime": regime,
-                        "key_regimes": key_regimes,
-                        "survivors": len(touched)}
-    return sorted(touched)
-
-
 def _files_touching_keys(spark, files: dict[str, dict], updates: DataFrame,
                          keys: str | list[str],
                          snap_root: str | None = None,
@@ -3095,202 +3003,73 @@ def _files_touching_keys(spark, files: dict[str, dict], updates: DataFrame,
                          inv: dict | None = None) -> list[str]:
     """The live files that MAY hold a row matching some update row
     on the (possibly composite) ``keys`` — the conjunctive
-    per-column intersection of the single-column tests: a row in
-    file F matches update u only if EVERY key column agrees, so F
-    is safely skippable as soon as ANY key column's footer range
-    misses every distinct update value for that column. Each
-    column's test is the bisect/aggregate machinery below
-    (including its NaN guard); the sets intersect with
-    short-circuit — an empty intersection stops probing further
-    columns. Conservative in the composite direction by design:
+    per-column test: a row in file F matches update u only if EVERY
+    key column agrees, so F is safely skippable as soon as ANY key
+    column's footer range misses every distinct update value for
+    that column. Conservative in the composite direction by design:
     per-column ranges cannot see cross-column correlation, so a
     file may be touched even though no full composite key lands in
-    it — never the reverse."""
+    it — never the reverse.
+
+    Each key column's test is built ONCE: the collected sorted keys
+    under the collect gate (_collectable_keys), a _KeyDigest over
+    it, or no test at all for a domain without a monotone
+    projection (that column cannot exclude). The tests then run on
+    one path at every table size: the vectorized pass
+    (_merge_touch_vec) over a stats_parsed checkpoint, and the
+    per-file _merge_touch_test over everything else — the log
+    suffix's adds, plain-dict snapshots, checkpoints without stat
+    columns. ``types``/``inv`` turn on the effective-stats view
+    (partition tokens as exact [v, v] ranges, physical->logical
+    re-keying). ``spark`` is unused: the key sets come from
+    ``updates``' own session.
+
+    NaN guard (ADVICE r9): parquet footer min/max EXCLUDES NaN while
+    Spark JOIN keys treat NaN = NaN as equal, so with a NaN update
+    key every float-statted file is conservatively touched."""
+    global _LAST_MERGE_PLAN
     if isinstance(keys, str):
         keys = [keys]
-    store = files._store if isinstance(files, _LazyFiles) else None
-    if (spark is not None and store is not None
-            and store.n > _DISTRIBUTED_PRUNE_BOUND):
-        # columnar-checkpoint fast path (r13): one Spark job
-        # evaluates the conjunctive touch test over the checkpoint
-        # parquet; the driver sees O(touched + suffix). Falls
-        # through to the per-column machinery when a key set
-        # exceeds the collect gate. types/inv carry the effective-
-        # stats view into the job, so partitioned and column-mapped
-        # tables prune with their typed partition tokens too.
-        dist = _files_touching_keys_dist(
-            spark, files, updates, keys, snap_root,
-            bloom_cols or set(), colmap or {}, types, inv)
-        if dist is not None:
-            return dist
-    else:
-        # small table / no columnar store: the per-column driver
-        # machinery below is the plan (last_merge_plan() visibility)
-        global _LAST_MERGE_PLAN
-        _LAST_MERGE_PLAN = {"regime": "driver-loop",
-                            "key_regimes": {k: "keys" for k in keys},
-                            "survivors": None}
-    if types is not None or inv is not None:
-        # driver machinery consumes the materialized effective-
-        # stats view (partition tokens as [v, v], logical keying) —
-        # what the call sites built via _pruning_view before r13
-        files = {p: {**m, "stats": _effective_stats(m, types or {},
-                                                    inv)}
-                 for p, m in files.items()}
-    touched: set[str] | None = None
+    key_regimes: dict[str, str] = {}
+    col_tests: list[tuple] = []
     for k in keys:
-        t = set(_files_touching_keys_col(
-            spark, files, updates, k,
-            snap_root if k in (bloom_cols or ()) else None,
-            phys_key=(colmap or {}).get(k, k)))
-        touched = t if touched is None else (touched & t)
-        if not touched:
-            break
-    return sorted(touched or ())
-
-
-def _files_touching_keys_col(spark, files: dict[str, dict],
-                             updates: DataFrame, key: str,
-                             snap_root: str | None = None,
-                             phys_key: str | None = None) -> list[str]:
-    """The live files whose footer [min,max] range for ``key``
-    intersects at least one update key — plus every file lacking a
-    stat for ``key`` (conservative). Two regimes:
-
-    - distinct keys <= ``_KEY_COLLECT_BOUND`` (the normal upsert):
-      collect the sorted key list once and bisect each file's
-      [lo, hi] against it — n_files * log(n_keys) C-level compares
-      on the driver, type-exact (Python int compares never round a
-      bigint through float64), zero Spark planning per file.
-    - beyond the bound: distributed aggregates over the distinct
-      keys (a boolean max per candidate file — map-side-combinable,
-      zero key collect, zero join), batched ``_STAT_AGG_BATCH``
-      file-columns per pass so a 100k-file table never builds a
-      100k-column plan; the key set is cached across passes.
-
-    The file LIST is log metadata and is already on the driver.
-
-    NaN guard (ADVICE r9): parquet footer min/max EXCLUDES NaN, and
-    in Spark ``NaN >= lo`` is false — so a range test can never
-    select a file on behalf of a NaN update key, even though Spark
-    JOIN keys treat NaN = NaN as equal (a NaN-keyed row in some file
-    WOULD be replaced by a NaN-keyed update). When the updates
-    contain a NaN key, every float-statted file is conservatively
-    treated as touched (stat-less files already are)."""
-    from pyspark.sql import functions as F
-
-    touched = [p for p, m in files.items()
-               if key not in m.get("stats", {})]
-    ranged = [(p, m["stats"][key]) for p, m in files.items()
-              if key in m.get("stats", {})]
-    if not ranged:
-        return touched
-    keys = updates.select(F.col(key).alias("_k")).distinct()
-    dt = updates.schema[key].dataType.simpleString()
-    # normalize the key domain to the stats' (see _key_stat_domain;
-    # ADVICE r14 high / VERDICT r13 #5). Covers BOTH regimes: the
-    # collected bisect AND the distributed range aggregate below.
-    keys, dt = _key_stat_domain(keys, dt)
-    if dt == "timestamp":
-        # non-UTC session: the keys could NOT normalize into the
-        # UTC token domain. The bisect regime is guarded by its
-        # TypeError catch, but the aggregate regime below would
-        # feed the string stats to F.lit and Spark would cast them
-        # as SESSION wall time — shifting the range and silently
-        # under-touching (code-review r14). String-statted files
-        # are conservatively touched instead.
-        touched += [p for p, st in ranged if isinstance(st[0], str)]
-        ranged = [(p, st) for p, st in ranged
-                  if not isinstance(st[0], str)]
-        if not ranged:
-            return touched
-    is_float = dt in ("float", "double")
-    if dt in ("string", "binary"):
-        # one job: count + sampled average width (bytes-aware
-        # bound, VERDICT r11 #5)
-        row = keys.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.length("_k")).alias("w")).collect()[0]
-        n_keys = row["n"]
-        est_bytes = n_keys * ((row["w"] or 0.0)
-                              + _KEY_PYOBJ_OVERHEAD)
-    else:
-        n_keys = keys.count()
-        est_bytes = n_keys * 32
-    if _key_collect_ok(n_keys, est_bytes):
-        # fast path: bounded key set -> driver bisect over the file
-        # ranges (no per-batch Spark planning; the aggregate path
-        # below measured ~20 s of pure Catalyst work per 1024-wide
-        # pass at 1000 files)
-        import bisect
-
-        ks = [r[0] for r in keys.collect() if r[0] is not None]
-        if is_float and any(k != k for k in ks):
-            # NaN update key: footer stats exclude NaN but join
-            # keys match NaN = NaN — conservatively touch every
-            # stat-bearing file (ADVICE r9)
-            return touched + [p for p, _rng in ranged]
-        ks = sorted(k for k in ks if k == k)
-        if not ks:
-            return touched
-        for p, (lo, hi) in ranged:
-            try:
-                i = bisect.bisect_left(ks, lo)
-                hit = i < len(ks) and ks[i] <= hi
-            except TypeError:
-                # stat/key type mismatch (e.g. a stat domain this
-                # code doesn't normalize yet): conservative touch,
-                # mirroring _stat_excludes' guard
-                touched.append(p)
+        ks, has_nan = _collectable_keys(updates, k)
+        key_regimes[k] = "keys"
+        if ks is None:
+            # over the collect gate: a bounded VALUE-RANGE digest
+            # (VERDICT r13 #4), conservative-only (a digest can
+            # over-touch, never under-touch)
+            ks = _key_digest(updates, k)
+            if ks is None:
+                key_regimes[k] = "exotic"
                 continue
-            if hit:
-                # BLOOM refinement (r11 third stint): the range says
-                # "maybe" — on an indexed column, probe the file's
-                # sidecar with the in-range update keys; a file whose
-                # filter excludes ALL of them provably holds no
-                # matching row (false positives only widen). A
-                # scattered-key upsert on a hash-laid-out table drops
-                # from "touch every range-overlapping file" to
-                # ~keys + fpp x files. Bounded per file so a huge
-                # key set never turns pruning into the scan.
-                meta = files[p]
-                if snap_root is not None and "bloom" in meta:
-                    j = bisect.bisect_right(ks, hi)
-                    in_range = ks[i:j]
-                    if len(in_range) <= _BLOOM_PROBE_BOUND:
-                        # sidecars key PHYSICAL names (ADVICE r11)
-                        ent = _bloom_probe_entry(
-                            snap_root, meta["bloom"],
-                            os.path.basename(p), phys_key or key)
-                        if ent is not None and not any(
-                                _bloom_might_contain(ent, kv)
-                                for kv in in_range):
-                            continue
-                touched.append(p)
-        return touched
-    if is_float:
-        has_nan = keys.agg(
-            F.max(F.isnan(F.col("_k")))).collect()[0][0]
-        if has_nan:
-            # every stat-bearing file of a float key may hide NaN
-            # rows the range test can't see — touch them all; the
-            # range test below runs on nothing.
-            return touched + [p for p, _rng in ranged]
-    n_batches = math.ceil(len(ranged) / _STAT_AGG_BATCH)
-    if n_batches > 1:
-        keys = keys.cache()
-    try:
-        for b in range(n_batches):
-            chunk = ranged[b * _STAT_AGG_BATCH:(b + 1) * _STAT_AGG_BATCH]
-            aggs = [F.max((F.col("_k") >= F.lit(lo))
-                          & (F.col("_k") <= F.lit(hi))).alias(f"f{i}")
-                    for i, (_p, (lo, hi)) in enumerate(chunk)]
-            row = keys.agg(*aggs).collect()[0]
-            touched += [chunk[i][0] for i in range(len(chunk)) if row[i]]
-    finally:
-        if n_batches > 1:
-            keys.unpersist()
-    return touched
+            has_nan, key_regimes[k] = ks.has_nan, "digest"
+        dt = updates.schema[k].dataType.simpleString()
+        col_tests.append((
+            k, (colmap or {}).get(k, k), ks, has_nan,
+            dt in ("float", "double"),
+            k in (bloom_cols or ())
+            and not isinstance(ks, _KeyDigest)))
+    root_abs = (os.path.abspath(snap_root)
+                if snap_root is not None else None)
+    store = files._store if isinstance(files, _LazyFiles) else None
+    kept = (_merge_touch_vec(store, col_tests, root_abs, types, inv)
+            if store is not None else None)
+    if kept is not None:
+        regime = "vectorized"
+        dead = files._removed | set(files._added)
+        touched = [p for p in kept if p not in dead]
+        rest = files._added.items()
+    else:
+        regime, touched, rest = "driver-loop", [], files.items()
+    touched.extend(
+        p for p, m in rest
+        if _merge_touch_test(m, col_tests, root_abs,
+                             os.path.basename(p), types, inv))
+    _LAST_MERGE_PLAN = {"regime": regime,
+                        "key_regimes": key_regimes,
+                        "survivors": len(touched)}
+    return sorted(touched)
 
 
 # ---------------------------------------------------------------- #
@@ -3323,8 +3102,7 @@ _DV_BROADCAST_BOUND = 2_000_000
 # same bounded-metadata class as the merge planner's survivor sets
 # (~16 MB of (file, pos) rows per million positions). Past it the
 # unchanged distributed write runs. 0 disables the local path.
-_DV_LOCAL_POSITIONS = int(os.environ.get(
-    "SPARK_GRAFT_DV_LOCAL_POSITIONS", str(4_000_000)))
+_DV_LOCAL_POSITIONS = 4_000_000
 
 # OPTIMIZE rewrites (purges) a dv-carrying file once this fraction
 # of its physical rows is deleted — Delta's deletedRowsRatio rule.
@@ -3481,8 +3259,8 @@ def merge_upsert(spark, root: str, updates: DataFrame,
     unreferenced garbage vacuum() collects, never corruption.
 
     Diagnostics: ``last_merge_plan()`` reports which touch-test
-    regime planned this merge (vectorized / spark-job /
-    driver-loop), each key's key-set regime (collected keys vs
+    path planned this merge (vectorized / driver-loop), each
+    key's key-set regime (collected keys vs
     over-gate digest), and the survivor count."""
     keys = [key] if isinstance(key, str) else list(key)
     os.makedirs(root, exist_ok=True)
@@ -4418,9 +4196,10 @@ def _effective_stats(meta: dict, types: dict[str, str],
 
 def _prune_survives(m: dict, conjuncts: list[tuple], types: dict,
                     float_cols: set, cmap: dict, inv: dict) -> bool:
-    """The per-file range/null/partition survival test — shared by
-    the driver prune loop and the distributed checkpoint-prune job
-    (one truth, two execution venues). A file survives unless SOME
+    """The per-file range/null/partition survival test — the
+    reference the vectorized checkpoint prune matches, and the
+    whole test for log-suffix adds and plain-dict snapshots. A
+    file survives unless SOME
     conjunct's test proves it can't match; missing stats always
     survive. Bloom refinement is NOT here — it runs as a second
     pass over the survivors."""
@@ -4472,17 +4251,6 @@ def _prune_survives(m: dict, conjuncts: list[tuple], types: dict,
             if _stat_excludes(st, op, lit, is_f):
                 return False
     return True
-
-
-# Above this many checkpoint entries, stat pruning runs as one Spark
-# job over the columnar checkpoint instead of a driver loop:
-# executors parse the metas in parallel and only the SURVIVORS (plus
-# the small log suffix) ever materialize on the driver.
-_DISTRIBUTED_PRUNE_BOUND = 50_000
-
-# Tests flip this off to pin the driver-loop / Spark-job regimes
-# against the stats_parsed vector path (three-way parity).
-_VECTOR_PRUNE = True
 
 
 def _cp_eff_range(tbl, names: set, pcol: str, lc: str,
@@ -4547,8 +4315,8 @@ def _cp_vector_prune(store: "_CpStore", conjuncts: list[tuple],
     job, no json.loads per file; only SURVIVORS parse their metas.
     Returns (paths, meta-JSON strings) of the surviving checkpoint
     rows, or None when the checkpoint predates stat columns or no
-    conjunct is vectorizable (the caller's driver-loop /
-    Spark-job regimes take over).
+    conjunct is vectorizable (the caller runs the per-file
+    _prune_survives over every entry).
 
     Soundness mirrors _stat_excludes/_prune_survives cell-for-cell:
     - a NULL stat cell never excludes (fill_null False);
@@ -4819,15 +4587,14 @@ def _files_possibly_matching(snap: dict,
     stat value's Python type — both err toward float (less
     pruning).
 
-    SCALE (VERDICT r12 #1): when the snapshot rides a columnar
-    checkpoint bigger than _DISTRIBUTED_PRUNE_BOUND and a spark
-    handle is given, the range test runs as ONE Spark job over the
-    checkpoint parquet — the driver receives the surviving (path,
-    meta) pairs plus evaluates the log suffix locally, so a pruned
-    point query on a million-file table materializes O(survivors),
-    not O(files), driver-side. Survivor metas seed the store's
-    overlay so downstream planning resolves them without building
-    the full path index.
+    One path at every table size: when the snapshot rides a
+    stats_parsed checkpoint, the conjuncts run vectorized over its
+    stat columns (_cp_vector_prune) and only survivors parse their
+    metas; the log suffix's adds — and plain-dict snapshots,
+    checkpoints without stat columns, predicates with no
+    vectorizable conjunct — take the per-file _prune_survives.
+    Survivor metas seed the store's overlay so downstream planning
+    resolves them without building the full path index.
 
     BLOOM probing has two regimes (the _KEY_COLLECT_BOUND pattern):
     up to _BLOOM_DRIVER_LOAD_BOUND range-surviving candidates load
@@ -4856,12 +4623,10 @@ def _files_possibly_matching(snap: dict,
     n_bloom_cand = 0
     vec = (_cp_vector_prune(store, conjuncts, types, float_cols,
                             cmap, inv)
-           if _VECTOR_PRUNE and store is not None and conjuncts
-           else None)
+           if store is not None and conjuncts else None)
     if vec is not None:
-        # stats_parsed fast path (VERDICT r13 #1): the conjunct
-        # test already ran as pyarrow compute over the checkpoint
-        # buffers — works with OR WITHOUT a spark handle, so the
+        # the conjunct test already ran as pyarrow compute over the
+        # checkpoint buffers — no spark handle needed, so the
         # format("txlog") plan path (no handle inside planning)
         # rides it too. Only survivors parse their metas.
         vpaths, vmetas = vec
@@ -4870,7 +4635,8 @@ def _files_possibly_matching(snap: dict,
                      for p, mj in zip(vpaths, vmetas)
                      if p not in dead]
         if len(survivors) <= 10_000:
-            # bounded overlay seed, same rule as the other regimes
+            # bounded overlay seed, same rule as the per-file
+            # branch below
             store._overlay.update(dict(survivors))
         # the suffix's own adds evaluate driver-side (small)
         survivors.extend(
@@ -4878,54 +4644,6 @@ def _files_possibly_matching(snap: dict,
             if _prune_survives(m, conjuncts, types, float_cols,
                                cmap, inv))
         if eq_conjs:
-            n_bloom_cand = sum(1 for _p, m in survivors
-                               if "bloom" in m)
-    elif (spark is not None and store is not None and conjuncts
-            and store.n > _DISTRIBUTED_PRUNE_BOUND):
-        _ship_package(spark)  # job closure refs module helpers
-        import pandas as pd  # noqa: F401  (worker dependency)
-        conj, typ, fcols, cm = (list(conjuncts), dict(types),
-                                set(float_cols), dict(cmap))
-        iv = dict(inv) if inv is not None else None
-
-        def _scan(batches):
-            import pandas as _pd
-            for pdf in batches:
-                kp, km = [], []
-                for p, mj in zip(pdf["path"], pdf["meta"]):
-                    m = json.loads(mj)
-                    if _prune_survives(m, conj, typ, fcols, cm, iv):
-                        kp.append(p)
-                        km.append(mj)
-                yield _pd.DataFrame({"path": kp, "meta": km})
-
-        cp_df = spark.read.parquet(store.path) \
-            .select("path", "meta")  # stat columns stay columnar
-        rows = (cp_df.mapInPandas(_scan, "path string, meta string")
-                .collect())
-        dead = files._removed | set(files._added)
-        survivors = []
-        for r in rows:
-            if r["path"] in dead:
-                continue  # suffix removed/shadowed this path
-            survivors.append((r["path"], json.loads(r["meta"])))
-        if len(survivors) <= 10_000:
-            # seed the store overlay so planners resolve survivors
-            # without the full path index — bounded exactly like the
-            # driver branch (an unselective predicate must not pin
-            # a million parsed metas in the process-global store
-            # cache — code-review r13)
-            store._overlay.update(dict(survivors))
-        # the suffix's own adds evaluate driver-side (small)
-        survivors.extend(
-            (p, m) for p, m in files._added.items()
-            if _prune_survives(m, conjuncts, types, float_cols,
-                               cmap, inv))
-        if eq_conjs:
-            # regime choice: only SURVIVORS are ever bloom-probed,
-            # and their metas are already driver-side — no extra
-            # Spark job, and the count reflects the actual number
-            # of sidecar loads the driver would do
             n_bloom_cand = sum(1 for _p, m in survivors
                                if "bloom" in m)
     else:

@@ -680,11 +680,15 @@ def run_txlog_metadata_scale_leg(spark) -> dict:
     - t_snapshot_cold (caches cleared): now O(1) — the parquet
       sidecar loads LAZILY; t_snapshot_warm: the per-(root,
       version) cache hit.
-    - t_prune + prune_mode: _files_possibly_matching with a spark
-      handle — above _DISTRIBUTED_PRUNE_BOUND the range test runs
-      as one Spark job over the checkpoint parquet and the driver
-      materializes O(survivors); rss_mb_prune is sampled RIGHT
-      AFTER it (the sub-linear-driver-RSS contract).
+    - t_prune + prune_mode: _files_possibly_matching — the range
+      test runs vectorized over the checkpoint's stats_parsed
+      columns and the driver materializes O(survivors);
+      rss_mb_prune is sampled RIGHT AFTER it (the
+      sub-linear-driver-RSS contract).
+    - t_merge_prune + merge_regime: _files_touching_keys for a
+      3-key upsert — the same vectorized pass; above 50k files
+      also a 5M-key over-collect-gate merge through the key
+      digest (t_merge_overgate).
     - t_plan: the native reader's partitions() (the DS-worker path,
       no spark handle). r14: rides the stats_parsed VECTORIZED
       prune (pyarrow compute over checkpoint buffers, VERDICT r13
@@ -704,10 +708,6 @@ def run_txlog_metadata_scale_leg(spark) -> dict:
     schema_json = (spark.range(1)
                    .selectExpr("id as k", "cast(id as double) as v")
                    .schema.json())
-    # warm the python workers once: t_prune measures the prune job,
-    # not the session's first-ever worker spin-up
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long").count()
     row: dict = {}
     tiers = (("x10k", 10_000), ("x100k", 100_000), ("x1m", 1_000_000))
     if os.environ.get("SPARK_GRAFT_PROBE_10M"):
@@ -786,9 +786,8 @@ def run_txlog_metadata_scale_leg(spark) -> dict:
         row[f"t_snapshot_warm_{k}"] = round(
             time.monotonic() - t0, 4)
         target = (n_files // 2) * 1000 + 17
-        # r14: stats_parsed vectorized prune preempts BOTH the
-        # driver loop and the Spark job whenever the checkpoint
-        # carries stat columns (it does, at every tier)
+        # the stats_parsed vectorized prune runs whenever the
+        # checkpoint carries stat columns (it does, at every tier)
         row[f"prune_mode_{k}"] = "vectorized"
         t0 = time.monotonic()
         cand = T._files_possibly_matching(
@@ -796,10 +795,9 @@ def run_txlog_metadata_scale_leg(spark) -> dict:
         row[f"t_prune_{k}"] = round(time.monotonic() - t0, 3)
         row[f"files_candidate_{k}"] = len(cand)
         row[f"rss_mb_prune_{k}"] = _rss_mb()
-        # MERGE planning tier (r13 follow-up): the distributed
-        # touch test over the same checkpoint — a bounded upsert's
-        # key set against 10k/100k/1M files must plan O(touched)
-        # driver-side through one Spark job
+        # MERGE planning tier: the vectorized touch test over the
+        # same checkpoint — a bounded upsert's key set against
+        # 10k/100k/1M files must plan O(touched) driver-side
         ups = spark.createDataFrame(
             [(target,), (target + 1,), (target + 500,)],
             "k bigint")
@@ -814,7 +812,7 @@ def run_txlog_metadata_scale_leg(spark) -> dict:
         row[f"merge_regime_{k}"] = mp.get("regime")
         row[f"merge_key_regime_{k}"] = (
             mp.get("key_regimes") or {}).get("k")
-        if n_files > T._DISTRIBUTED_PRUNE_BOUND:
+        if n_files > 50_000:
             # OVER-COLLECT-GATE tier (r14, VERDICT r13 #4): 5M
             # distinct keys blow the collect gate; the bounded
             # VALUE-RANGE digest must plan exactly the ~5000 files
@@ -864,23 +862,20 @@ def run_txlog_metadata_scale_leg(spark) -> dict:
             continue  # opt-in 10M tier: skip the legacy loop —
             # ~70 s of json.loads that says nothing the 1M
             # before/after doesn't already pin
-        # before/after honesty: the same plan through the r13
-        # driver json.loads loop (what t_plan measured last round)
-        T._VECTOR_PRUNE = False
-        try:
-            snap_l = T.snapshot(root)
-            rdr_l = T.TxLogBatchReader(
-                {"path": root},
-                _ST.fromJson(_json.loads(schema_json)), snap_l,
-                root)
-            rdr_l.pushFilters([EqualTo(("k",), target)])
-            t0 = time.monotonic()
-            parts_l = rdr_l.partitions()
-            row[f"t_plan_legacy_{k}"] = round(
-                time.monotonic() - t0, 3)
-            assert len(parts_l) == len(parts)
-        finally:
-            T._VECTOR_PRUNE = True
+        # before/after honesty: the same plan through the per-file
+        # json.loads loop — a snapshot whose file map is a plain
+        # dict never vectorizes; the timed span includes parsing
+        # every meta, as the r13 loop did
+        t0 = time.monotonic()
+        snap_l = {**snap, "files": dict(snap["files"].items())}
+        rdr_l = T.TxLogBatchReader(
+            {"path": root},
+            _ST.fromJson(_json.loads(schema_json)), snap_l, root)
+        rdr_l.pushFilters([EqualTo(("k",), target)])
+        parts_l = rdr_l.partitions()
+        row[f"t_plan_legacy_{k}"] = round(time.monotonic() - t0, 3)
+        assert len(parts_l) == len(parts)
+        del snap_l, rdr_l
     for phase in ("snapshot_cold", "prune", "plan"):
         row[f"exp_{phase}_10k_100k"] = round(math.log10(max(
             row[f"t_{phase}_x100k"], 1e-3) / max(

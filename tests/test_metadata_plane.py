@@ -1,8 +1,8 @@
 """The metadata plane at scale (VERDICT r12 #1): columnar parquet
 checkpoints, the per-(root, version) snapshot cache, lazy file maps,
 legacy-JSON compatibility, torn-checkpoint degradation, and the
-distributed checkpoint-prune path's equivalence with the driver
-loop."""
+vectorized checkpoint prune's equivalence with the per-file
+reference (the same snapshot with a plain-dict file map)."""
 
 from __future__ import annotations
 
@@ -18,6 +18,12 @@ from gcp_data_engineering_workshop_spark.sources import txlog as T
 
 def _ids(df):
     return sorted(r[0] for r in df.select("id").collect())
+
+
+def _plain(snap):
+    """``snap`` with a plain-dict file map: the pruners never
+    vectorize it, so it answers with the per-file reference."""
+    return {**snap, "files": dict(snap["files"].items())}
 
 
 def _mk(spark, root, commits=12, every=5):
@@ -138,11 +144,10 @@ def test_snapshot_cache_hits_and_isolation(spark, tmp_path):
     assert T.read(spark, root).count() == 18
 
 
-def test_distributed_prune_matches_driver_loop(spark, tmp_path,
-                                               monkeypatch):
-    """With the bound forced low, the Spark-job prune over the
-    columnar checkpoint returns exactly the driver loop's surviving
-    set — including suffix adds, suffix removes and dv shadows."""
+def test_distributed_prune_matches_driver_loop(spark, tmp_path):
+    """The vectorized prune over the columnar checkpoint returns
+    exactly the per-file driver loop's surviving set — including
+    suffix adds, suffix removes and dv shadows."""
     root = str(tmp_path / "t")
     df = spark.range(500).select(
         F.col("id").alias("k"), (F.col("id") % 50).alias("g"))
@@ -159,24 +164,21 @@ def test_distributed_prune_matches_driver_loop(spark, tmp_path,
                    mode="dv")
     snap = T.snapshot(root)
     assert isinstance(snap["files"], T._LazyFiles)
+    store = snap["files"]._store
+    types = T._schema_types(snap)
     for conj in ([("k", "=", 130)], [("k", ">=", 400)],
                  [("k", "<", 50), ("g", "=", 3)],
                  [("k", "=", 510)], [("g", "notnull", None)],
                  [("k", "in", (3, 130, 412))],
                  [("k", "<=", 200.5)], [("k", "=", 130.0)]):
-        # r14: three-way — vectorized stats_parsed path (the
-        # default) vs the driver json.loads loop vs the Spark job
+        # the checkpoint rows really ride the vectorized kernel
+        assert T._cp_vector_prune(store, conj, types, set(), {},
+                                  None) is not None, conj
         vec = sorted(T._files_possibly_matching(
-            snap, conj, root, None))
-        monkeypatch.setattr(T, "_VECTOR_PRUNE", False)
-        driver = sorted(T._files_possibly_matching(
-            snap, conj, root, None))
-        monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
-        dist = sorted(T._files_possibly_matching(
             snap, conj, root, spark))
-        monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 50_000)
-        monkeypatch.setattr(T, "_VECTOR_PRUNE", True)
-        assert vec == driver == dist, conj
+        driver = sorted(T._files_possibly_matching(
+            _plain(snap), conj, root, spark))
+        assert vec == driver, conj
     # and the pruned read itself stays hash-correct
     got = sorted(r[0] for r in T.read_where(
         spark, root, "k >= 400 and k < 410").select("k").collect())
@@ -204,12 +206,11 @@ def test_lazy_files_survive_full_scan_paths(spark, tmp_path):
     assert _ids(T.read(spark, root)) == list(range(24))
 
 
-def test_distributed_merge_prune_matches_driver(spark, tmp_path,
-                                                monkeypatch):
-    """r13: the merge touch test over the columnar checkpoint (one
-    Spark job) returns exactly the per-column driver machinery's
-    file set — single and composite keys, bloom refinement, NaN
-    float keys, suffix adds and dv shadows."""
+def test_distributed_merge_prune_matches_driver(spark, tmp_path):
+    """The merge touch test over the columnar checkpoint (the
+    vectorized pass) returns exactly the per-file reference's file
+    set — single and composite keys, bloom refinement, NaN float
+    keys, suffix adds and dv shadows."""
     root = str(tmp_path / "t")
     T.set_bloom_index(root, ["k"])
     df = spark.range(600).select(
@@ -235,29 +236,32 @@ def test_distributed_merge_prune_matches_driver(spark, tmp_path,
         return spark.createDataFrame(rows, schema)
 
     cases = [
-        (mk_updates([(155,), (610,)], "k bigint"), ["k"]),
+        (mk_updates([(155,), (610,)], "k bigint"), ["k"],
+         "vectorized"),
         (mk_updates([(5, 2), (300, 0)], "k bigint, g bigint"),
-         ["k", "g"]),
-        (mk_updates([(float("nan"),)], "f double"), ["f"]),
-        (mk_updates([(999999,)], "k bigint"), ["k"]),
+         ["k", "g"], "vectorized"),
+        # a NaN key leaves no column that can exclude: every entry
+        # takes the per-file test
+        (mk_updates([(float("nan"),)], "f double"), ["f"],
+         "driver-loop"),
+        (mk_updates([(999999,)], "k bigint"), ["k"], "vectorized"),
     ]
-    for ups, keys in cases:
+    for ups, keys, regime in cases:
         driver = T._files_touching_keys(
             spark, dict(snap["files"].items()), ups, keys, root,
             bloom_cols, snap.get("colmap"))
-        monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
-        dist = T._files_touching_keys(
+        assert T.last_merge_plan()["regime"] == "driver-loop"
+        vec = T._files_touching_keys(
             spark, snap["files"], ups, keys, root,
             bloom_cols, snap.get("colmap"))
-        monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 50_000)
-        assert dist == driver, (keys, dist, driver)
-    # ...and a real merge through the distributed plan stays exact
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
+        assert T.last_merge_plan()["regime"] == regime, keys
+        assert vec == driver, (keys, vec, driver)
+    # ...and a real merge through the vectorized plan stays exact
     ups = spark.range(100, 110).select(
         F.col("id").alias("k"), F.lit(99).cast("long").alias("g"),
         F.lit(1.0).alias("f"))
     T.merge_upsert(spark, root, ups, "k", checkpoint_every=0)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 50_000)
+    assert T.last_merge_plan()["regime"] == "vectorized"
     got = T.read(spark, root)
     assert got.where("g = 99").count() == 10
     assert got.where("k = 160").count() == 0  # dv held
@@ -267,12 +271,12 @@ def test_distributed_merge_prune_matches_driver(spark, tmp_path,
 
 
 def test_distributed_merge_prune_partitioned_and_mapped(
-        spark, tmp_path, monkeypatch):
-    """r13 follow-up: partitioned AND column-mapped tables ride the
-    distributed merge touch test too — effective stats (typed
-    partition tokens as [v, v], physical->logical re-keying) travel
-    into the job, so pruning matches the driver's materialized view
-    exactly and a real merge stays correct."""
+        spark, tmp_path):
+    """Partitioned AND column-mapped tables ride the vectorized
+    merge touch test too — effective stats (typed partition tokens
+    as [v, v], physical->logical re-keying) feed the checkpoint
+    pass, so pruning matches the per-file reference exactly and a
+    real merge stays correct."""
     root = str(tmp_path / "t")
     df = spark.range(400).select(
         F.col("id").alias("k"), (F.col("id") % 4).alias("p"),
@@ -290,32 +294,31 @@ def test_distributed_merge_prune_partitioned_and_mapped(
         types=T._schema_types(snap), inv=T._inv_colmap(snap))
     driver = T._files_touching_keys(
         spark, snap["files"].copy(), ups, ["key", "p"], **kwargs)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
-    dist = T._files_touching_keys(
+    vec = T._files_touching_keys(
         spark, snap["files"], ups, ["key", "p"], **kwargs)
-    assert dist == driver
-    # partition-token pruning is LIVE in the job: only p=1 files
+    assert T.last_merge_plan()["regime"] == "vectorized"
+    assert vec == driver
+    # partition-token pruning is LIVE in the kernel: only p=1 files
     assert driver and all("p=1" in f for f in driver)
-    # end-to-end merge through the distributed plan
+    # end-to-end merge through the vectorized plan
     T.merge_upsert(spark, root, ups, ["key", "p"],
                    checkpoint_every=0)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 50_000)
     got = T.read(spark, root)
     assert got.count() == 400
     assert sorted(r[0] for r in got.where("key in (101, 105)")
                   .select("name").collect()) == ["xx", "yy"]
 
 
-def test_merge_keyed_on_date_partition_column(spark, tmp_path,
-                                              monkeypatch):
+def test_merge_keyed_on_date_partition_column(spark, tmp_path):
     """ADVICE r14 high: r13's ISO date partition tokens give date
     columns STRING [lo,hi] stats, but a merge keyed on the date
     column collects datetime.date keys — the bisect raised
     TypeError and crashed the daily-upsert shape this feature
     targets. Keys now normalize to the ISO string domain
     (mirroring _lit_norm); the merge must prune to the target date
-    partition AND stay correct, on the driver path and the
-    distributed path, for upsert and delete."""
+    partition AND stay correct, on the per-file reference and the
+    vectorized pass (string tokens against string keys), for upsert
+    and delete."""
     import datetime
 
     root = str(tmp_path / "t")
@@ -325,7 +328,9 @@ def test_merge_keyed_on_date_partition_column(spark, tmp_path,
                    (F.col("id") % 5).cast("int")).alias("ds"),
         (F.col("id") * 2).alias("v"))
     T.append(df, root, checkpoint_every=1, partition_by=["ds"])
+    T._SNAPSHOTS.clear()  # resolve THROUGH the checkpoint
     snap = T.snapshot(root)
+    assert isinstance(snap["files"], T._LazyFiles)
     ups = spark.createDataFrame(
         [(7, datetime.date(2024, 1, 3), 999)],
         "id bigint, ds date, v bigint")  # id=7 lives in ds=01-03
@@ -338,11 +343,19 @@ def test_merge_keyed_on_date_partition_column(spark, tmp_path,
         **kwargs)
     # date-token pruning is LIVE: only the 2024-01-03 partition
     assert driver and all("ds=2024-01-03" in f for f in driver)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
-    dist = T._files_touching_keys(
+    vec = T._files_touching_keys(
         spark, snap["files"], ups, ["ds", "id"], **kwargs)
-    assert dist == driver
-    # end-to-end upsert through the distributed plan
+    assert T.last_merge_plan()["regime"] == "vectorized"
+    assert vec == driver
+    # ds alone: the string-key coarse pass must prune on its own
+    ds_only = T._files_touching_keys(
+        spark, snap["files"], ups.select("ds"), ["ds"], **kwargs)
+    assert T.last_merge_plan()["regime"] == "vectorized"
+    assert ds_only == T._files_touching_keys(
+        spark, dict(snap["files"].items()), ups.select("ds"),
+        ["ds"], **kwargs)
+    assert ds_only and all("ds=2024-01-03" in f for f in ds_only)
+    # end-to-end upsert through the vectorized plan
     T.merge_upsert(spark, root, ups, ["ds", "id"],
                    checkpoint_every=0)
     got = T.read(spark, root)
@@ -355,10 +368,51 @@ def test_merge_keyed_on_date_partition_column(spark, tmp_path,
         spark.createDataFrame([(datetime.date(2024, 1, 4),)],
                               "ds date"),
         "ds", checkpoint_every=0)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 50_000)
     left = T.read(spark, root)
     assert left.count() == 80
     assert left.where("ds = date'2024-01-04'").count() == 0
+
+
+def test_small_checkpointed_merge_plans_vectorized(spark, tmp_path):
+    """A string-keyed and a numeric-keyed merge on a SMALL table
+    with a stats_parsed checkpoint plan through the vectorized
+    kernel (no size switch sends them to the per-file loop) and
+    touch exactly the files the per-file reference touches."""
+    root = str(tmp_path / "t")
+    df = spark.range(300).select(
+        F.col("id").alias("k"),
+        F.format_string("u%04d", F.col("id")).alias("s"),
+        (F.col("id") * 2).alias("v"))
+    for i in range(3):  # range-clustered files on BOTH keys
+        T.append(df.where((F.col("k") >= i * 100)
+                          & (F.col("k") < (i + 1) * 100))
+                 .coalesce(1), root, checkpoint_every=1)
+    snap = T.snapshot(root)
+    assert snap["files"]._store.has_stats()
+    for keys, rows, schema in (
+            ("s", [("u0150", 0)], "s string, v bigint"),
+            ("k", [(150, 0)], "k bigint, v bigint")):
+        ups = spark.createDataFrame(rows, schema)
+        ref = T._files_touching_keys(
+            spark, dict(snap["files"].items()), ups, keys, root,
+            set(), {})
+        got = T._files_touching_keys(
+            spark, snap["files"], ups, keys, root, set(), {})
+        plan = T.last_merge_plan()
+        assert plan["regime"] == "vectorized", (keys, plan)
+        assert plan["key_regimes"] == {keys: "keys"}
+        assert got == ref and len(got) == 1, (keys, got, ref)
+    # the public verbs plan the same way
+    T.merge_upsert(spark, root, spark.createDataFrame(
+        [(7, "u0007", -1)], "k bigint, s string, v bigint"), "s",
+        checkpoint_every=1)
+    assert T.last_merge_plan()["regime"] == "vectorized"
+    T.merge_delete(spark, root, spark.createDataFrame(
+        [(250,)], "k bigint"), "k", checkpoint_every=1)
+    assert T.last_merge_plan()["regime"] == "vectorized"
+    got = T.read(spark, root)
+    assert got.count() == 299
+    assert got.where("s = 'u0007'").select("v").collect()[0][0] == -1
 
 
 def test_columnar_checkpoint_gates_legacy_readers(spark, tmp_path):
@@ -426,12 +480,11 @@ def test_stats_parsed_columns_in_checkpoint(spark, tmp_path):
     assert t2.column("s_lo:k").null_count == 0
 
 
-def test_vector_prune_plan_path_no_spark(spark, tmp_path,
-                                         monkeypatch):
+def test_vector_prune_plan_path_no_spark(spark, tmp_path):
     """The format("txlog") PLAN path (no Spark handle inside
     planning) rides the vectorized stats_parsed prune: partitions()
     must plan only the stat-surviving files, identical to the
-    driver loop, without parsing every meta."""
+    per-file reference, without parsing every meta."""
     import json as _json
 
     from pyspark.sql.datasource import EqualTo
@@ -444,16 +497,17 @@ def test_vector_prune_plan_path_no_spark(spark, tmp_path,
         T.append(df.where((F.col("k") >= i * 100)
                           & (F.col("k") < (i + 1) * 100))
                  .coalesce(1), root, checkpoint_every=4)
+    T._SNAPSHOTS.clear()  # resolve THROUGH the checkpoint
     snap = T.snapshot(root)
+    assert snap["files"]._store.has_stats()
     schema = _ST.fromJson(_json.loads(snap["schema"]))
     rdr = T.TxLogBatchReader({"path": root}, schema, snap, root)
     rdr.pushFilters([EqualTo(("k",), 150)])
     parts = rdr.partitions()
     assert len(parts) == 1 and len(parts[0].files) == 1
-    # identical to the driver loop with vectorization disabled
-    monkeypatch.setattr(T, "_VECTOR_PRUNE", False)
-    snap2 = T.snapshot(root)
-    rdr2 = T.TxLogBatchReader({"path": root}, schema, snap2, root)
+    # identical to the per-file reference (plain-dict file map)
+    rdr2 = T.TxLogBatchReader({"path": root}, schema, _plain(snap),
+                              root)
     rdr2.pushFilters([EqualTo(("k",), 150)])
     parts2 = rdr2.partitions()
     assert [p.files for p in parts] == [p.files for p in parts2]
@@ -461,11 +515,11 @@ def test_vector_prune_plan_path_no_spark(spark, tmp_path,
 
 def test_over_gate_merge_key_digest(spark, tmp_path, monkeypatch):
     """VERDICT r13 #4: when the distinct merge keys exceed the
-    collect gate, the distributed touch test ships a VALUE-RANGE
-    bucket digest instead of falling back to O(files) driver
-    aggregates. The digest is sound (never under-touches: every
-    range containing a key answers True) and the end-to-end merge
-    through the digest regime stays exact."""
+    collect gate, the vectorized touch test runs a VALUE-RANGE
+    bucket digest instead of the collected keys. The digest is
+    sound (never under-touches: every range containing a key
+    answers True) and the end-to-end merge through the digest
+    regime stays exact."""
     import numpy as np
 
     root = str(tmp_path / "t")
@@ -477,7 +531,9 @@ def test_over_gate_merge_key_digest(spark, tmp_path, monkeypatch):
         T.append(df.where((F.col("k") >= i * 500)
                           & (F.col("k") < (i + 1) * 500))
                  .coalesce(1), root, checkpoint_every=4)
+    T._SNAPSHOTS.clear()  # resolve THROUGH the checkpoint
     snap = T.snapshot(root)
+    assert isinstance(snap["files"], T._LazyFiles)
     # updates clustered in [1000, 1100): digest must touch ONLY
     # the [1000, 1500) file even with the collect gate forced shut
     ups = spark.range(1000, 1100).select(
@@ -487,15 +543,16 @@ def test_over_gate_merge_key_digest(spark, tmp_path, monkeypatch):
         spark, dict(snap["files"].items()), ups, ["k"], root,
         set(), {})
     monkeypatch.setattr(T, "_KEY_COLLECT_BOUND", 0)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
     dig = T._files_touching_keys(
         spark, snap["files"], ups, ["k"], root, set(), {})
+    plan = T.last_merge_plan()
+    assert plan["regime"] == "vectorized"
+    assert plan["key_regimes"] == {"k": "digest"}
     assert set(dig) >= set(exact)
     assert len(dig) == 1, dig  # clustered keys: same single file
     # end-to-end merge THROUGH the digest regime stays exact
     T.merge_upsert(spark, root, ups, "k", checkpoint_every=0)
     monkeypatch.setattr(T, "_KEY_COLLECT_BOUND", 2_000_000)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 50_000)
     got = T.read(spark, root)
     assert got.count() == 2000
     assert got.where("s = 'zz'").count() == 100
@@ -595,20 +652,21 @@ def test_streamed_prune_matches_resident(spark, tmp_path,
     ups = spark.createDataFrame([(130,), (131,)], "k bigint")
     touched_res = sorted(T._files_touching_keys(
         spark, snap["files"], ups, "k", root, set(), {}))
+    assert touched_res == T._files_touching_keys(
+        spark, dict(snap["files"].items()), ups, "k", root, set(), {})
 
     # fresh caches, streaming forced on for every checkpoint; the
-    # merge must ride the vectorized regime (not the small-table
-    # driver loop, which loads the full table by design)
+    # merge rides the vectorized regime at every table size
     T._SNAPSHOTS.clear()
     T._CP_STORES.clear()
     monkeypatch.setattr(T, "_CP_STREAM_BYTES", 0)
-    monkeypatch.setattr(T, "_DISTRIBUTED_PRUNE_BOUND", 1)
     snap2 = T.snapshot(root)
     streamed = [sorted(T._files_possibly_matching(
         snap2, c, root, None)) for c in conjs]
     assert streamed == resident
     touched_st = sorted(T._files_touching_keys(
         spark, snap2["files"], ups, "k", root, set(), {}))
+    assert T.last_merge_plan()["regime"] == "vectorized"
     assert touched_st == touched_res
     # the streamed regime must not have pinned the stats projection
     st = snap2["files"]._store

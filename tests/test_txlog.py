@@ -428,7 +428,7 @@ def test_merge_nan_key_touches_all_float_statted_files(spark, tmp_path):
         [(float("nan"), "n")], "k double, v string")
     touched = T._files_touching_keys(spark, snap["files"], ups, "k")
     assert sorted(touched) == sorted(snap["files"])
-    # same conservative rule on the distributed fallback path
+    # same conservative rule through the over-gate key digest
     import gcp_data_engineering_workshop_spark.sources.txlog as _T
     old = _T._KEY_COLLECT_BOUND
     try:
@@ -440,41 +440,12 @@ def test_merge_nan_key_touches_all_float_statted_files(spark, tmp_path):
         _T._KEY_COLLECT_BOUND = old
 
 
-def test_files_touching_keys_batches_column_groups(spark, tmp_path,
-                                                   monkeypatch):
-    """VERDICT r9 What's-wrong #3: the membership aggregate is
-    batched in column groups — pruning results are identical across
-    the batch boundary (checked against the unbatched answer)."""
-    root = str(tmp_path / "tbl")
-    n_files = 23
-    # one staged write (append_sliced) lands the same 23 one-slice
-    # files as the old 23 sequential appends in ~1/5 the wall time
-    # (r16 suite budget); the pruning surface under test is the
-    # FILE set + stats, which is bit-identical either way
-    T.append_sliced(spark.createDataFrame(
-        [(i,) for i in range(n_files * 10)], "k int").coalesce(1),
-        root, f"k div 10", n_files, checkpoint_every=0)
-    snap = T.snapshot(root)
-    assert len(snap["files"]) == n_files
-    ups = spark.createDataFrame([(5,), (105,), (222,)], "k int")
-    bisected = sorted(T._files_touching_keys(
-        spark, snap["files"], ups, "k"))  # fast path (key collect)
-    monkeypatch.setattr(T, "_KEY_COLLECT_BOUND", 0)  # force agg path
-    unbatched = sorted(T._files_touching_keys(
-        spark, snap["files"], ups, "k"))
-    monkeypatch.setattr(T, "_STAT_AGG_BATCH", 7)  # force 4 passes
-    batched = sorted(T._files_touching_keys(
-        spark, snap["files"], ups, "k"))
-    assert bisected == unbatched == batched
-    assert len(batched) == 3  # exactly the three key-bearing files
-
-
 def test_key_collect_bound_is_bytes_aware(spark, tmp_path,
                                           monkeypatch):
     """VERDICT r11 #5: the merge fast path's driver-collect bound
     scales by key WIDTH — wide string keys at a row count the old
-    2M-row bound would have collected take the distributed
-    fallback, with identical pruning."""
+    2M-row bound would have collected take the key digest, with
+    identical pruning."""
     root = str(tmp_path / "tbl")
     for b in range(3):
         T.append(spark.createDataFrame(
@@ -497,7 +468,7 @@ def test_key_collect_bound_is_bytes_aware(spark, tmp_path,
     assert decisions and decisions[-1][2] is True  # narrow: collect
     # wide keys under a tight bytes bound: row count UNDER the row
     # bound, but the estimated bytes (1 key x ~260 B) exceed it ->
-    # distributed fallback, same answer
+    # key digest, same answer
     monkeypatch.setattr(T, "_KEY_COLLECT_BYTES", 100)
     decisions.clear()
     slow = sorted(T._files_touching_keys(spark, snap["files"],
@@ -1374,9 +1345,10 @@ def test_merge_compound_key_semantics_and_pruning(spark, tmp_path):
 
 def test_merge_compound_key_fallback_path_agrees(
         spark, tmp_path, monkeypatch):
-    """The distributed (beyond-collect-bound) pruning regime picks
-    the same touched-file set as the bisect fast path for a
-    composite key — forced via _KEY_COLLECT_BOUND = 0."""
+    """The over-collect-gate key digest picks the same touched-file
+    set as the collected sorted keys — forced via
+    _KEY_COLLECT_BOUND = 0 — for a composite key on a 3-file table
+    and for keys scattered over a 23-file table."""
     root = str(tmp_path / "tbl")
     for b in range(3):
         T.append(
@@ -1384,16 +1356,38 @@ def test_merge_compound_key_fallback_path_agrees(
                 "id", "cast(id % 3 as int) as g",
                 "cast(id as double) as v").coalesce(1),
             root, checkpoint_every=0)
-    updates = spark.createDataFrame(
-        [(12, 0, 1.0), (13, 1, 2.0)], "id bigint, g int, v double")
-    snap = T.snapshot(root)
-    fast = T._files_touching_keys(
-        spark, snap["files"], updates, ["id", "g"])
-    monkeypatch.setattr(T, "_KEY_COLLECT_BOUND", 0)
-    slow = T._files_touching_keys(
-        spark, snap["files"], updates, ["id", "g"])
-    assert fast == slow
-    assert len(fast) == 1  # only the [10,20) file intersects on id
+    scattered = str(tmp_path / "scattered")
+    n_files = 23
+    # one staged write (append_sliced) lands 23 one-slice files,
+    # keys [10 i, 10 i + 10) in file i
+    T.append_sliced(spark.createDataFrame(
+        [(i,) for i in range(n_files * 10)], "k int").coalesce(1),
+        scattered, "k div 10", n_files, checkpoint_every=0)
+    assert len(T.snapshot(scattered)["files"]) == n_files
+    cases = [
+        (root, spark.createDataFrame(
+            [(12, 0, 1.0), (13, 1, 2.0)],
+            "id bigint, g int, v double"), ["id", "g"], 1),
+        # only the [10,20) file intersects on id
+        (scattered, spark.createDataFrame(
+            [(5,), (105,), (222,)], "k int"), ["k"], 3),
+        # exactly the three key-bearing files
+    ]
+    gate = T._KEY_COLLECT_BOUND
+    for tbl, updates, keys, n_touched in cases:
+        snap = T.snapshot(tbl)
+        monkeypatch.setattr(T, "_KEY_COLLECT_BOUND", gate)
+        fast = T._files_touching_keys(
+            spark, snap["files"], updates, keys)
+        assert set(T.last_merge_plan()["key_regimes"].values()) \
+            == {"keys"}
+        monkeypatch.setattr(T, "_KEY_COLLECT_BOUND", 0)
+        slow = T._files_touching_keys(
+            spark, snap["files"], updates, keys)
+        assert set(T.last_merge_plan()["key_regimes"].values()) \
+            == {"digest"}
+        assert fast == slow, keys
+        assert len(fast) == n_touched, (keys, fast)
 
 
 def test_merge_delete_semantics_and_file_granularity(spark, tmp_path):

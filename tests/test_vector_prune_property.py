@@ -170,20 +170,30 @@ def test_vector_prune_colmap_rekeying(tmp_path):
 
 def _mk_digest(vals, nb=64):
     """A _KeyDigest built in pure python with the same formula the
-    Spark build uses (float64 projection, equal-width buckets)."""
+    Spark build uses (float64 projection, equal-width buckets;
+    strings: kmin/kmax in the UTF-8 byte domain, first-8-bytes
+    projection)."""
     import numpy as np
     vals = sorted(vals)
-    pmin, pmax = float(vals[0]), float(vals[-1])
+    if isinstance(vals[0], str):
+        kind, proj = "str", T._KeyDigest._proj_str
+        enc = [v.encode("utf-8") for v in vals]
+        kmin, kmax = min(enc), max(enc)
+    else:
+        kind, proj = "num", float
+        kmin, kmax = vals[0], vals[-1]
+    ps = [proj(v) for v in vals]
+    pmin, pmax = min(ps), max(ps)
     w = (pmax - pmin) / nb
     bits = np.zeros(nb, dtype=bool)
     if w == 0.0:
         bits[0] = True
     else:
-        for v in vals:
-            b = int(math.floor((float(v) - pmin) / w))
+        for p in ps:
+            b = int(math.floor((p - pmin) / w))
             bits[max(0, min(b, nb - 1))] = True
-    return T._KeyDigest("num", vals[0], vals[-1], pmin, pmax, w,
-                        bits, has_nan=False)
+    return T._KeyDigest(kind, kmin, kmax, pmin, pmax, w, bits,
+                        has_nan=False)
 
 
 _keyset = st.lists(st.integers(-60, 60), min_size=1, max_size=8,
@@ -191,25 +201,47 @@ _keyset = st.lists(st.integers(-60, 60), min_size=1, max_size=8,
 _fkeyset = st.lists(st.floats(-60, 60, allow_nan=False,
                               allow_infinity=False),
                     min_size=1, max_size=8, unique=True).map(sorted)
+# string keys and stats over an alphabet that exercises code-point
+# order: NUL (numpy's 'U' strips trailing NULs), a BMP char above
+# the surrogate range and a supplementary-plane char (UTF-16 code
+# units order these two the other way round)
+_ustrs = st.text(alphabet="ab\x00\uffff\U0001f600", min_size=0,
+                 max_size=3)
+_skeyset = st.lists(_ustrs, min_size=1, max_size=8,
+                    unique=True).map(sorted)
+_mmeta = st.fixed_dictionaries({}, optional={
+    "stats": st.fixed_dictionaries({}, optional={
+        "k": _rng(_ints), "f": _rng(_flts), "s": _rng(_ustrs)}),
+    "partition": st.fixed_dictionaries({}, optional={
+        "p": st.one_of(st.none(),
+                       st.integers(0, 5).map(str))}),
+})
 
 
 @settings(max_examples=100, deadline=None)
-@given(metas=st.lists(_meta, min_size=1, max_size=12),
-       iks=_keyset, fks=_fkeyset,
-       use_digest=st.booleans(),
-       composite=st.booleans())
+@given(metas=st.lists(_mmeta, min_size=1, max_size=12),
+       iks=_keyset, fks=_fkeyset, sks=_skeyset,
+       use_digest=st.booleans(), str_digest=st.booleans(),
+       cols=st.sampled_from(["k", "kf", "s", "ks", "kfs"]))
 def test_vector_merge_touch_equals_per_file_loop(
-        tmp_path_factory, metas, iks, fks, use_digest, composite):
-    """r14: the in-process vectorized merge touch test (coarse
-    searchsorted/bucket masks + exact re-verify) returns EXACTLY
-    the per-file _merge_touch_test survivors, over randomized
-    stats/tokens and int/float/digest key regimes."""
+        tmp_path_factory, metas, iks, fks, sks, use_digest,
+        str_digest, cols):
+    """The in-process vectorized merge touch test (coarse
+    searchsorted/bucket/byte-range masks + exact re-verify) returns
+    EXACTLY the per-file _merge_touch_test survivors, over
+    randomized stats/tokens and int/float/string/digest key
+    regimes, single and composite."""
     tmp = tmp_path_factory.mktemp("vm")
     store = _mk_store(tmp, metas)
-    ik = _mk_digest(iks) if use_digest else iks
-    col_tests = [("k", "k", ik, False, False, False)]
-    if composite:
+    col_tests = []
+    if "k" in cols:
+        ik = _mk_digest(iks) if use_digest else iks
+        col_tests.append(("k", "k", ik, False, False, False))
+    if "f" in cols:
         col_tests.append(("f", "f", fks, False, True, False))
+    if "s" in cols:
+        sk = _mk_digest(sks) if str_digest else sks
+        col_tests.append(("s", "s", sk, False, False, False))
     vec = T._merge_touch_vec(store, col_tests, None, TYPES, {})
     slow = [f"p{i}" for i, m in enumerate(metas)
             if T._merge_touch_test(m, col_tests, None, f"p{i}",
@@ -221,9 +253,9 @@ def test_vector_merge_touch_equals_per_file_loop(
 
 def test_vector_merge_touch_edges(tmp_path):
     """Edge regimes: empty key list (stat-bearing files provably
-    untouched, stat-less files stay), string keys (column skipped
-    coarse, exact re-verify still applies it), NaN float keys
-    (column contributes nothing), unselective fallback bound."""
+    untouched, stat-less files stay), string keys (coarse
+    code-point searchsorted, alone or with a numeric column), NaN
+    float keys (column contributes nothing)."""
     metas = [{"stats": {"k": [0, 9], "s": ["a", "c"]}},
              {"stats": {"k": [10, 19]}},
              {}]  # stat-less: conservative touch
@@ -233,12 +265,15 @@ def test_vector_merge_touch_edges(tmp_path):
         store, [("k", "k", [], False, False, False)], None,
         TYPES, {})
     assert vec == ["p2"]
-    # string keys alone: coarse pass unusable -> None (fallback)
+    # string keys alone vectorize: 'b' lands in p0's [a, c], the
+    # s-stat-less files stay; 'x' excludes p0
     assert T._merge_touch_vec(
         store, [("s", "s", ["b"], False, False, False)], None,
-        TYPES, {}) is None
-    # but combined with a numeric column, the exact re-verify
-    # applies the string test to the numeric survivors
+        TYPES, {}) == ["p0", "p1", "p2"]
+    assert T._merge_touch_vec(
+        store, [("s", "s", ["x"], False, False, False)], None,
+        TYPES, {}) == ["p1", "p2"]
+    # combined with a numeric column, both tests apply
     vec2 = T._merge_touch_vec(
         store, [("k", "k", [5], False, False, False),
                 ("s", "s", ["x"], False, False, False)], None,
@@ -250,12 +285,3 @@ def test_vector_merge_touch_edges(tmp_path):
                 ("f", "f", [1.0], True, True, False)], None,
         TYPES, {})
     assert vec3 == ["p0", "p2"]
-    # survivor bound: shrink it and the fallback engages
-    orig = T._MERGE_VEC_SURVIVOR_BOUND
-    try:
-        T._MERGE_VEC_SURVIVOR_BOUND = 0
-        assert T._merge_touch_vec(
-            store, [("k", "k", [5], False, False, False)], None,
-            TYPES, {}) is None
-    finally:
-        T._MERGE_VEC_SURVIVOR_BOUND = orig
