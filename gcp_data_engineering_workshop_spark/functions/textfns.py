@@ -296,27 +296,6 @@ def kr_hash_arrow(col) -> Column:
     return f(c)
 
 
-def wide_hash_arrow(col) -> Column:
-    """Arrow-vectorized twin of ``wide_hash`` (same packed 62-bit
-    value, NULL-preserving)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _h(s):
-        import pandas as pd
-
-        h1, h2 = _kr_fold_pair(s.tolist())
-        packed = h1 * KR2_MOD + h2
-        out = pd.Series(packed, dtype="int64").astype("Int64")
-        out[h1 < 0] = pd.NA
-        return out
-
-    _h.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    f = pandas_udf(_h, "bigint")
-    c = F.col(col) if isinstance(col, str) else col
-    return f(c)
-
-
 def span_keys_arrow(ws: Column, span_words: int) -> Column:
     """Arrow-vectorized fusion of ``word_hashes_of`` +
     ``span_keys_of``: word array -> packed 62-bit span fingerprints in

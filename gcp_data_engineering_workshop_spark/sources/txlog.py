@@ -36,11 +36,10 @@ Guarantees (each pytest-enforced):
 - ISOLATION (snapshot): readers resolve the live file set from the
   log as of a version and read only those files; concurrent commits
   never change what an in-flight read sees.
-- OPTIMISTIC CONCURRENCY: a committer that loses the version race
-  re-reads the log and retries against the new head. Two appends
-  serialize (both land, distinct versions); read-modify-write ops
-  (overwrite/merge/optimize) carry the snapshot version they read
-  and fail with CommitConflict if the head moved.
+- OPTIMISTIC CONCURRENCY: every writer commits through _transact —
+  a committer that loses the version race re-plans against the new
+  head. Two appends serialize (both land, distinct versions);
+  read-modify-write ops recompute from the head they commit on.
 - TIME TRAVEL: read(version=N) replays the log prefix. vacuum()
   with the default retention keeps recently-referenced files; like
   the paper's VACUUM, deep-history time travel is bounded by the
@@ -1356,32 +1355,20 @@ def set_bloom_index(root: str, cols: list[str], fpp: float = 0.01,
     pruning) — run backfill_bloom_index for a SIDECAR-ONLY
     back-fill (zero data rewritten), or OPTIMIZE to rewrite them
     under the index, the Delta contract."""
-    for _ in range(max_retries):
-        snap = snapshot(root)
-        entry = {"op": "set-bloom", "ts": time.time(),
-                 "bloom": {"cols": list(cols), "fpp": fpp,
-                           "max_ndv": max_ndv},
-                 "actions": []}
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(f"set_bloom_index lost the race under {root}")
+    entry = {"op": "set-bloom", "ts": time.time(),
+             "bloom": {"cols": list(cols), "fpp": fpp,
+                       "max_ndv": max_ndv},
+             "actions": []}
+    return _transact(root, lambda snap: entry, max_retries,
+                     checkpoint_every, "set_bloom_index")
 
 
 def drop_bloom_index(root: str, max_retries: int = 5,
                      checkpoint_every: int = 10) -> int:
-    for _ in range(max_retries):
-        snap = snapshot(root)
-        entry = {"op": "drop-bloom", "ts": time.time(),
-                 "bloom": {}, "actions": []}
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(f"drop_bloom_index lost the race under {root}")
+    entry = {"op": "drop-bloom", "ts": time.time(),
+             "bloom": {}, "actions": []}
+    return _transact(root, lambda snap: entry, max_retries,
+                     checkpoint_every, "drop_bloom_index")
 
 
 def backfill_bloom_index(spark, root: str, max_retries: int = 5,
@@ -1401,10 +1388,8 @@ def backfill_bloom_index(spark, root: str, max_retries: int = 5,
 
     Returns the new version, or None when every live file already
     carries a sidecar (nothing to do). Raises when no bloom index
-    is declared. Loses a CAS race -> resnapshot and rebuild only
-    what is still live and unindexed."""
-    for _ in range(max_retries):
-        snap = snapshot(root)
+    is declared."""
+    def plan(snap):
         spec = snap.get("bloom") or {}
         if not spec.get("cols"):
             raise ValueError(
@@ -1424,15 +1409,10 @@ def backfill_bloom_index(spark, root: str, max_retries: int = 5,
                    if ref]
         if not actions:
             return None  # nothing indexable (types/ndv caps)
-        entry = {"op": "bloom-backfill", "ts": time.time(),
-                 "actions": actions}
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"backfill_bloom_index lost the race under {root}")
+        return {"op": "bloom-backfill", "ts": time.time(),
+                "actions": actions}
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "backfill_bloom_index")
 
 
 def _stage_write(df: DataFrame, root: str,
@@ -1556,6 +1536,40 @@ def _try_commit(root: str, version: int, entry: dict) -> bool:
         return False
     finally:
         os.unlink(tmp)
+
+
+def _transact(root: str, plan, max_retries: int,
+              checkpoint_every: int, op: str):
+    """The commit protocol every txlog writer runs. Each attempt
+    resolves the head snapshot and calls ``plan(snap)``:
+
+    - a dict is the commit entry; it claims version
+      ``snap["version"] + 1`` through ``_try_commit`` (exclusive
+      link, so a plan built on a stale head can never land);
+    - anything else (the head version, or None) finishes WITHOUT
+      committing and is returned as is — the no-op path of DML that
+      matches nothing and of replayed stream batches.
+
+    A won claim runs ``_maybe_checkpoint`` (a checkpoint lands when
+    the version is a multiple of ``checkpoint_every``; 0 disables)
+    and returns the version. A lost claim re-resolves the head and
+    calls ``plan`` again — blind appends return the same entry,
+    read-modify-write ops recompute against the new head, and a plan
+    may rebase an already-staged entry unchanged when the commits in
+    between touched nothing it read (optimize). After
+    ``max_retries`` lost claims it raises CommitConflict naming
+    ``op``."""
+    for _ in range(max_retries):
+        snap = snapshot(root)
+        entry = plan(snap)
+        if not isinstance(entry, dict):
+            return entry
+        v = snap["version"] + 1
+        if _try_commit(root, v, entry):
+            _maybe_checkpoint(root, v, checkpoint_every)
+            return v
+    raise CommitConflict(f"{op} lost the version race {max_retries} "
+                         f"times under {root}")
 
 
 # ------------------------------------------------------------------ #
@@ -1956,28 +1970,16 @@ def add_constraint(root: str, name: str, expr: str,
         _check_constraints(read(spark, root), {name: expr})
     entry = {"op": "set-constraint", "ts": time.time(),
              "name": name, "expr": expr, "actions": []}
-    for _ in range(max_retries):
-        head = _list_versions(root)
-        v = (head[-1] if head else 0) + 1
-        if _try_commit(root, v, entry):
-            _maybe_checkpoint(root, v, checkpoint_every)
-            return v
-    raise CommitConflict(f"add_constraint lost the version race "
-                         f"{max_retries} times under {root}")
+    return _transact(root, lambda snap: entry, max_retries,
+                     checkpoint_every, "add_constraint")
 
 
 def drop_constraint(root: str, name: str, max_retries: int = 20,
                     checkpoint_every: int = 10) -> int:
     entry = {"op": "drop-constraint", "ts": time.time(),
              "name": name, "actions": []}
-    for _ in range(max_retries):
-        head = _list_versions(root)
-        v = (head[-1] if head else 0) + 1
-        if _try_commit(root, v, entry):
-            _maybe_checkpoint(root, v, checkpoint_every)
-            return v
-    raise CommitConflict(f"drop_constraint lost the version race "
-                         f"{max_retries} times under {root}")
+    return _transact(root, lambda snap: entry, max_retries,
+                     checkpoint_every, "drop_constraint")
 
 
 def _apply_generated(df: DataFrame, gen: dict) -> DataFrame:
@@ -2059,8 +2061,7 @@ def rename_column(root: str, old: str, new: str,
     name; RESTORE rolls the mapping back."""
     from pyspark.sql.types import StructField, StructType
 
-    for _ in range(max_retries):
-        snap = snapshot(root)
+    def plan(snap):
         if not snap.get("schema"):
             raise ValueError(
                 f"rename_column: no recorded schema under {root}")
@@ -2104,13 +2105,9 @@ def rename_column(root: str, old: str, new: str,
                  "schema": new_st.json(), "colmap": cmap,
                  "actions": []}
         _mark_feature(entry, snap, "column-mapping")
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"rename_column lost the snapshot race under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "rename_column")
 
 
 def drop_column(root: str, name: str, max_retries: int = 5,
@@ -2126,8 +2123,7 @@ def drop_column(root: str, name: str, max_retries: int = 5,
     constraint-referenced columns."""
     from pyspark.sql.types import StructType
 
-    for _ in range(max_retries):
-        snap = snapshot(root)
+    def plan(snap):
         if not snap.get("schema"):
             raise ValueError(
                 f"drop_column: no recorded schema under {root}")
@@ -2170,13 +2166,9 @@ def drop_column(root: str, name: str, max_retries: int = 5,
         if name in gen:
             entry["generated"] = {k: v for k, v in gen.items()
                                   if k != name}
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"drop_column lost the snapshot race under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "drop_column")
 
 
 def append(df: DataFrame, root: str, max_retries: int = 20,
@@ -2256,14 +2248,8 @@ def append(df: DataFrame, root: str, max_retries: int = 20,
     if creating and gen:
         entry["generated"] = gen
         _mark_feature(entry, snap0, "generated-columns")
-    for _ in range(max_retries):
-        head = _list_versions(root)
-        v = (head[-1] if head else 0) + 1
-        if _try_commit(root, v, entry):
-            _maybe_checkpoint(root, v, checkpoint_every)
-            return v
-    raise CommitConflict(f"append lost the version race "
-                         f"{max_retries} times under {root}")
+    return _transact(root, lambda snap: entry, max_retries,
+                     checkpoint_every, "append")
 
 
 def append_sliced(df: DataFrame, root: str, slice_expr: str,
@@ -2347,19 +2333,9 @@ def append_sliced(df: DataFrame, root: str, slice_expr: str,
                  "actions": [{"add": a} for a in by_slice[s]]}
         if rec is not None and not versions:
             entry["schema"] = rec
-        committed = False
-        for _ in range(max_retries):
-            head = _list_versions(root)
-            v = (head[-1] if head else 0) + 1
-            if _try_commit(root, v, entry):
-                _maybe_checkpoint(root, v, checkpoint_every)
-                versions.append(v)
-                committed = True
-                break
-        if not committed:
-            raise CommitConflict(
-                f"append_sliced lost the version race "
-                f"{max_retries} times under {root}")
+        versions.append(_transact(root, lambda snap: entry,
+                                  max_retries, checkpoint_every,
+                                  "append_sliced"))
     return versions
 
 
@@ -2397,8 +2373,8 @@ def overwrite(df: DataFrame, root: str, expected_version: int | None = None,
     # bloom spec is a table PROPERTY (like constraints): it
     # survives a full replace and indexes the new files
     adds = _stage_write(df, root, spec, None, snap0.get("bloom"))
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         if expected_version is not None and \
                 snap["version"] != expected_version:
             raise CommitConflict(
@@ -2424,12 +2400,9 @@ def overwrite(df: DataFrame, root: str, expected_version: int | None = None,
                  "generated": gen}
         if gen:
             _mark_feature(entry, snap, "generated-columns")
-        if _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(f"overwrite lost the version race "
-                         f"{max_retries} times under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "overwrite")
 
 
 def read(spark, root: str, version: int | None = None,
@@ -3251,11 +3224,7 @@ def merge_upsert(spark, root: str, updates: DataFrame,
     conjunctively (see _files_touching_keys): a file skips as soon
     as any one key column's range misses the updates.
 
-    Concurrency: the commit compare-and-swaps against the snapshot
-    version read at the start; a commit that lands in between
-    (append or overwrite) fails the CAS and the WHOLE merge re-runs
-    on the fresh snapshot — the read-modify-write is serializable,
-    never lost-update. Staged files from a failed attempt are
+    Staged files from an attempt that lost the version race are
     unreferenced garbage vacuum() collects, never corruption.
 
     Diagnostics: ``last_merge_plan()`` reports which touch-test
@@ -3266,8 +3235,8 @@ def merge_upsert(spark, root: str, updates: DataFrame,
     os.makedirs(root, exist_ok=True)
     updates = _apply_generated(updates,
                                snapshot(root).get("generated") or {})
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         rec = None
         if snap.get("schema") is not None:
             # updates must match the table exactly, OR evolve it
@@ -3322,15 +3291,9 @@ def merge_upsert(spark, root: str, updates: DataFrame,
         if new_cmap is not None:
             entry["colmap"] = new_cmap
             _mark_feature(entry, snap, "column-mapping")
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1, checkpoint_every)
-            return snap["version"] + 1
-        # lost the race: staged files become vacuumable garbage,
-        # re-run the merge against the new head
-    raise CommitConflict(
-        f"merge_upsert lost the snapshot race {max_retries} times "
-        f"under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "merge_upsert")
 
 
 def merge_delete(spark, root: str, keys_df: DataFrame,
@@ -3370,8 +3333,8 @@ def merge_delete(spark, root: str, keys_df: DataFrame,
         raise ValueError(f"merge_delete mode={mode!r}: "
                          f"expected 'rewrite' or 'dv'")
     keys = [key] if isinstance(key, str) else list(key)
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         probe = keys_df.select(*keys).dropDuplicates(keys)
         touched = _files_touching_keys(
             spark, snap["files"], probe, keys, root,
@@ -3424,13 +3387,9 @@ def merge_delete(spark, root: str, keys_df: DataFrame,
         if mode == "dv":
             entry["mode"] = "dv"
             _mark_feature(entry, snap, "deletion-vectors")
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1, checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"merge_delete lost the snapshot race {max_retries} times "
-        f"under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "merge_delete")
 
 
 _CMP_RE = re.compile(
@@ -4924,8 +4883,8 @@ def delete_where(spark, root: str, condition: str,
         raise ValueError(f"delete_where mode={mode!r}: "
                          f"expected 'rewrite' or 'dv'")
     _tz = spark.conf.get("spark.sql.session.timeZone", None)
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         if not snap["files"]:
             return snap["version"]
         cond = F.expr(condition)
@@ -4962,13 +4921,9 @@ def delete_where(spark, root: str, condition: str,
         if mode == "dv":
             entry["mode"] = "dv"
             _mark_feature(entry, snap, "deletion-vectors")
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1, checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"delete_where lost the snapshot race {max_retries} times "
-        f"under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "delete_where")
 
 
 def update_where(spark, root: str, condition: str,
@@ -5014,8 +4969,8 @@ def update_where(spark, root: str, condition: str,
         raise ValueError(f"update_where mode={mode!r}: "
                          f"expected 'rewrite' or 'dv'")
     _tz = spark.conf.get("spark.sql.session.timeZone", None)
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         if not snap["files"]:
             return snap["version"]
         cond = F.expr(condition)
@@ -5131,13 +5086,9 @@ def update_where(spark, root: str, condition: str,
         if mode == "dv":
             entry["mode"] = "dv"
             _mark_feature(entry, snap, "deletion-vectors")
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1, checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"update_where lost the snapshot race {max_retries} times "
-        f"under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "update_where")
 
 
 def overwrite_where(spark, df: DataFrame, root: str, condition: str,
@@ -5179,8 +5130,8 @@ def overwrite_where(spark, df: DataFrame, root: str, condition: str,
         raise ValueError(
             f"overwrite_where: replacement rows must all satisfy "
             f"{condition!r} (found at least one that does not)")
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         rec = _schema_check(df, snap.get("schema"), False)
         _check_constraints(df, snap.get("constraints", {}))
         cand = (_files_matching_pred(snap, condition, root, spark,
@@ -5209,14 +5160,9 @@ def overwrite_where(spark, df: DataFrame, root: str, condition: str,
             entry["schema"] = rec  # creating commit records schema
         if not entry["actions"]:
             return snap["version"]  # empty df into an empty scope
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"overwrite_where lost the snapshot race {max_retries} "
-        f"times under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "overwrite_where")
 
 
 def optimize(spark, root: str, target_bytes: int = 128 * 1024 * 1024,
@@ -5253,23 +5199,46 @@ def optimize(spark, root: str, target_bytes: int = 128 * 1024 * 1024,
     ``purge=True`` rewrites every vectored file in scope (REORG
     TABLE ... APPLY (PURGE)).
 
-    The swap commits with compare-and-swap against the snapshot
-    version, with LOGICAL conflict detection on a lost race (r11
-    third stint): interleaved commits that touched NO victim (meta
-    equality) commute, and the already-staged entry re-CASes at
-    the new head — compaction of a high-ingest table doesn't
-    starve behind appends; a changed victim forces the full
-    recompute, so readers NEVER see a half-compacted table or a
-    resurrected row. Returns the committed version (the current
-    version when there was nothing to compact). Small files are
+    A lost version race re-commits the staged entry only when no
+    victim changed (the rule in ``plan`` below), so readers NEVER
+    see a half-compacted table or a resurrected row. Returns the
+    committed version (the current version when there was nothing
+    to compact). Small files are
     THE silent scan killer at 100 TB; this is the maintenance job
     that fixes them without closing the table to writers."""
     from pyspark.sql import functions as F
 
     if sort_cols and zorder:
         raise ValueError("pass sort_cols OR zorder, not both")
-    for _ in range(max_retries):
-        snap = snapshot(root)
+    rebases = 20  # CAS attempts per staging after the first
+    staged = None  # (victim metas it read, entry, rebases used)
+    stagings = 0
+
+    def plan(snap):
+        nonlocal staged, stagings
+        # LOGICAL conflict detection instead of a blind re-run (the
+        # Delta OPTIMIZE conflict rule): a re-layout of specific old
+        # files COMMUTES with any commit that did not TOUCH one of
+        # its victims — concurrent appends (the common case on a
+        # busy table) just land alongside. Re-CAS the already-staged
+        # entry at the new head; only a commit that touched a victim
+        # forces the full recompute. "Touched" is META equality, not
+        # path presence: a concurrent dv-delete re-adds the same
+        # path with a vector ref, and committing our pre-vector
+        # staging over it would resurrect the deleted rows. Without
+        # this fast path, compaction of a high-ingest table starves
+        # — every append restarts the whole rewrite.
+        if staged is not None:
+            metas, entry, used = staged
+            if used < rebases and all(snap["files"].get(p) == m
+                                      for p, m in metas.items()):
+                staged = (metas, entry, used + 1)
+                return entry
+        if stagings == max_retries:
+            raise CommitConflict(
+                f"optimize lost the version race {max_retries} "
+                f"times under {root}")
+        stagings += 1
         if not snap["files"]:
             return snap["version"]
         # OPTIMIZE ... WHERE (r11): scope the maintenance to the
@@ -5376,34 +5345,10 @@ def optimize(spark, root: str, target_bytes: int = 128 * 1024 * 1024,
         entry = {"op": "optimize", "ts": time.time(),
                  "actions": ([{"remove": {"path": p}} for p in victims]
                              + [{"add": a} for a in adds])}
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1, checkpoint_every)
-            return snap["version"] + 1
-        # LOGICAL conflict detection instead of a blind re-run (the
-        # Delta OPTIMIZE conflict rule): a re-layout of specific old
-        # files COMMUTES with any commit that did not TOUCH one of
-        # its victims — concurrent appends (the common case on a
-        # busy table) just land alongside. Re-CAS the already-staged
-        # entry at the new head; only a commit that touched a victim
-        # forces the full recompute. "Touched" is META equality, not
-        # path presence: a concurrent dv-delete re-adds the same
-        # path with a vector ref, and committing our pre-vector
-        # staging over it would resurrect the deleted rows. Without
-        # this fast path, compaction of a high-ingest table starves
-        # — every append restarts the whole rewrite.
-        for _re_cas in range(20):  # bounded like every writer
-            head = snapshot(root)
-            if any(head["files"].get(p) != snap["files"][p]
-                   for p in victims):
-                break  # a victim changed: semantic conflict
-            if _try_commit(root, head["version"] + 1, entry):
-                _maybe_checkpoint(root, head["version"] + 1,
-                                  checkpoint_every)
-                return head["version"] + 1
-    raise CommitConflict(
-        f"optimize lost the snapshot race {max_retries} times "
-        f"under {root}")
+        staged = ({p: snap["files"][p] for p in victims}, entry, 0)
+        return entry
+    return _transact(root, plan, max_retries * (1 + rebases),
+                     checkpoint_every, "optimize")
 
 
 def clone(src_root: str, dst_root: str, version: int | None = None,
@@ -5476,15 +5421,15 @@ def clone(src_root: str, dst_root: str, version: int | None = None,
         entry["generated"] = dict(src["generated"])
     if src.get("bloom"):
         entry["bloom"] = dict(src["bloom"])
-    if not _try_commit(dst_root, 1, entry):
-        raise CommitConflict(f"clone lost the race for {dst_root}")
-    _maybe_checkpoint(dst_root, 1, checkpoint_every)
-    v = 1
+
+    def plan(snap):
+        if snap["version"]:
+            raise CommitConflict(f"clone lost the race for {dst_root}")
+        return entry
+    v = _transact(dst_root, plan, 1, checkpoint_every, "clone")
     for name, expr in sorted(src.get("constraints", {}).items()):
-        v += 1
-        _try_commit(dst_root, v,
-                    {"op": "set-constraint", "ts": time.time(),
-                     "name": name, "expr": expr, "actions": []})
+        v = add_constraint(dst_root, name, expr,
+                           checkpoint_every=checkpoint_every)
     return v
 
 
@@ -5532,14 +5477,8 @@ def _stamp_txn(root: str, app_id: str, batch_id: int,
     replicate_stream ride)."""
     entry = {"op": "txn", "ts": time.time(),
              "app_id": app_id, "batch_id": batch_id, "actions": []}
-    for _ in range(20):
-        vs = _list_versions(root)
-        nv = (vs[-1] if vs else 0) + 1
-        if _try_commit(root, nv, entry):
-            _maybe_checkpoint(root, nv, checkpoint_every)
-            return nv
-    raise CommitConflict(
-        f"txn watermark stamp lost the version race under {root}")
+    return _transact(root, lambda snap: entry, 20, checkpoint_every,
+                     "txn watermark stamp")
 
 
 def replicate_stream(spark, dst_root: str, key: str | list[str],
@@ -5594,8 +5533,7 @@ def _merge_apply(spark, root: str, gone: DataFrame, post: DataFrame,
     ``has_post`` carries the caller's already-counted gate: with no
     post rows and no touched files the apply is a provable no-op
     and commits nothing (merge_delete's contract)."""
-    for _ in range(5):
-        snap = snapshot(root)
+    def plan(snap):
         if snap.get("schema") is not None and has_post:
             # merge_upsert's strictness: exact schema or refuse
             # (the collapse path never evolves — the replica mirrors
@@ -5638,13 +5576,9 @@ def _merge_apply(spark, root: str, gone: DataFrame, post: DataFrame,
                  "actions": ([{"remove": {"path": p}}
                               for p in touched]
                              + [{"add": a} for a in adds])}
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"collapsed apply lost the snapshot race under {root}")
+        return entry
+    return _transact(root, plan, 5, checkpoint_every,
+                     "collapsed apply")
 
 
 def _replicate_collapsed(spark, changes: DataFrame, dst_root: str,
@@ -5856,79 +5790,83 @@ def stream_sink(root: str, app_id: str = "stream",
     """
 
     def _sink(batch_df, batch_id: int) -> None:
-        snap0 = snapshot(root)
-        if snap0["txn"].get(app_id, -1) >= batch_id:
-            return  # replayed micro-batch: already committed
-        batch_df = _apply_generated(batch_df,
-                                    snap0.get("generated") or {})
-        rec = _schema_check(batch_df, snap0.get("schema"), False)
-        _check_constraints(batch_df, snap0.get("constraints", {}))
-        adds = _stage_write(batch_df, root,
-                            snap0.get("partition_by"),
-                            snap0.get("colmap"),
-                            snap0.get("bloom"))
-        entry = {"op": "stream-append", "ts": time.time(),
-                 "app_id": app_id, "batch_id": batch_id,
-                 "actions": [{"add": a} for a in adds]}
-        if rec is not None:
-            entry["schema"] = rec
-        for attempt in range(20):
-            if attempt and snapshot(root)["txn"].get(
-                    app_id, -1) >= batch_id:
-                # a concurrent instance of the same app_id (driver
-                # failover / zombie run) won the race we just lost
-                # and already landed this batchId — committing again
-                # would break exactly-once
-                return
-            head = _list_versions(root)
-            v = (head[-1] if head else 0) + 1
-            if _try_commit(root, v, entry):
-                _maybe_checkpoint(root, v, checkpoint_every)
-                # AUTO-COMPACTION (r12, Delta's autoCompact): a
-                # long-running stream lands one small-file commit
-                # per micro-batch; every Nth batch folds them with
-                # a transactional OPTIMIZE (its own dataChange=false
-                # commit — downstream streams skip it, replays just
-                # find already-compacted files and no-op the batch
-                # BEFORE this point). Failures don't poison the
-                # batch: the data is committed either way — a
-                # transient optimize error (e.g. CommitConflict
-                # after losing version races) must not raise out of
-                # foreachBatch and fail a micro-batch whose data
-                # already landed.
-                if auto_optimize_every and \
-                        batch_id % auto_optimize_every == \
-                        auto_optimize_every - 1:
-                    try:
-                        optimize(batch_df.sparkSession, root,
-                                 target_bytes=optimize_target_bytes,
-                                 checkpoint_every=checkpoint_every)
-                    except Exception as e:
-                        # TRANSIENT classes only (ADVICE r14 + the
-                        # code-review follow-up): a lost version
-                        # race, an fs hiccup, or a failed Spark
-                        # compaction JOB (executor loss, shuffle
-                        # fetch, vacuum race -> Py4JJavaError)
-                        # retries at the next Nth batch — logged,
-                        # so compaction silently stopping leaves a
-                        # signal. Python-side engine bugs MUST
-                        # surface (a blanket swallow here once hid
-                        # a TypeError for a full round).
-                        try:
-                            from py4j.protocol import Py4JJavaError
-                        except ImportError:  # pragma: no cover
-                            Py4JJavaError = ()
-                        if not isinstance(
-                                e, (CommitConflict, OSError,
-                                    Py4JJavaError)):
-                            raise
-                        import logging
-                        logging.getLogger(__name__).warning(
-                            "auto-optimize skipped at batch %s "
-                            "under %s: %s", batch_id, root, e)
-                return
-        raise CommitConflict(f"stream batch {batch_id} lost the "
-                             f"version race under {root}")
+        staged: list[dict] = []
+        replayed = False
+
+        def plan(snap):
+            nonlocal replayed
+            # the watermark covers batchId when Spark replays a
+            # committed micro-batch, and also when a concurrent
+            # instance of the same app_id (driver failover / zombie
+            # run) won the version race we just lost — committing
+            # again would break exactly-once. Staging waits for the
+            # first plan, so a replay writes nothing.
+            replayed = snap["txn"].get(app_id, -1) >= batch_id
+            if replayed:
+                return snap["version"]
+            if not staged:
+                df = _apply_generated(batch_df,
+                                      snap.get("generated") or {})
+                rec = _schema_check(df, snap.get("schema"), False)
+                _check_constraints(df, snap.get("constraints", {}))
+                adds = _stage_write(df, root,
+                                    snap.get("partition_by"),
+                                    snap.get("colmap"),
+                                    snap.get("bloom"))
+                entry = {"op": "stream-append", "ts": time.time(),
+                         "app_id": app_id, "batch_id": batch_id,
+                         "actions": [{"add": a} for a in adds]}
+                if rec is not None:
+                    entry["schema"] = rec
+                staged.append(entry)
+            return staged[0]
+
+        _transact(root, plan, 20, checkpoint_every,
+                  f"stream batch {batch_id}")
+        if replayed:
+            return
+        # AUTO-COMPACTION (r12, Delta's autoCompact): a
+        # long-running stream lands one small-file commit
+        # per micro-batch; every Nth batch folds them with
+        # a transactional OPTIMIZE (its own dataChange=false
+        # commit — downstream streams skip it, replays just
+        # find already-compacted files and no-op the batch
+        # BEFORE this point). Failures don't poison the
+        # batch: the data is committed either way — a
+        # transient optimize error (e.g. CommitConflict
+        # after losing version races) must not raise out of
+        # foreachBatch and fail a micro-batch whose data
+        # already landed.
+        if auto_optimize_every and \
+                batch_id % auto_optimize_every == \
+                auto_optimize_every - 1:
+            try:
+                optimize(batch_df.sparkSession, root,
+                         target_bytes=optimize_target_bytes,
+                         checkpoint_every=checkpoint_every)
+            except Exception as e:
+                # TRANSIENT classes only (ADVICE r14 + the
+                # code-review follow-up): a lost version
+                # race, an fs hiccup, or a failed Spark
+                # compaction JOB (executor loss, shuffle
+                # fetch, vacuum race -> Py4JJavaError)
+                # retries at the next Nth batch — logged,
+                # so compaction silently stopping leaves a
+                # signal. Python-side engine bugs MUST
+                # surface (a blanket swallow here once hid
+                # a TypeError for a full round).
+                try:
+                    from py4j.protocol import Py4JJavaError
+                except ImportError:  # pragma: no cover
+                    Py4JJavaError = ()
+                if not isinstance(
+                        e, (CommitConflict, OSError,
+                            Py4JJavaError)):
+                    raise
+                import logging
+                logging.getLogger(__name__).warning(
+                    "auto-optimize skipped at batch %s "
+                    "under %s: %s", batch_id, root, e)
 
     return _sink
 
@@ -6092,8 +6030,8 @@ def restore(root: str, version: int | None = None,
     if spark is not None:
         _check_constraints(read(spark, root, version),
                            snapshot(root).get("constraints", {}))
-    for _ in range(max_retries):
-        snap = snapshot(root)
+
+    def plan(snap):
         # re-add on META inequality, not just path absence: a
         # deletion-vector delete re-commits the SAME path with a
         # different add action, so restoring across one must roll
@@ -6124,14 +6062,9 @@ def restore(root: str, version: int | None = None,
         # wrong directory contract. Always recorded (even []) so an
         # un-partitioned target resets a partitioned head.
         entry["partition_by"] = target.get("partition_by", [])
-        if snapshot(root)["version"] == snap["version"] and \
-                _try_commit(root, snap["version"] + 1, entry):
-            _maybe_checkpoint(root, snap["version"] + 1,
-                              checkpoint_every)
-            return snap["version"] + 1
-    raise CommitConflict(
-        f"restore lost the snapshot race {max_retries} times "
-        f"under {root}")
+        return entry
+    return _transact(root, plan, max_retries, checkpoint_every,
+                     "restore")
 
 
 def _feed_read_maps(root: str, versions: list[int],
@@ -8327,9 +8260,8 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
             adds = [a for m in messages if m is not None
                     for a in m.adds]
             if self.overwrite:
-                for _ in range(self.max_retries):
-                    snap = snapshot(self.root)
-                    entry = {
+                def plan(snap):
+                    return {
                         "op": "overwrite", "ts": time.time(),
                         "actions": ([{"remove": {"path": p}}
                                      for p in sorted(snap["files"])]
@@ -8338,15 +8270,9 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
                         "partition_by": self._spec,
                         "colmap": {}, "phys_dropped": [],
                         "generated": {}}
-                    if _try_commit(self.root, snap["version"] + 1,
-                                   entry):
-                        _maybe_checkpoint(self.root,
-                                          snap["version"] + 1,
-                                          self.checkpoint_every)
-                        return
-                raise CommitConflict(
-                    f"overwrite lost the version race "
-                    f"{self.max_retries} times under {self.root}")
+                _transact(self.root, plan, self.max_retries,
+                          self.checkpoint_every, "overwrite")
+                return
             entry = {"op": "append", "ts": time.time(),
                      "actions": [{"add": a} for a in adds]}
             if self._schema_rec is not None:
@@ -8357,16 +8283,8 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
                 entry["colmap"] = self._new_cmap
                 _mark_feature(entry, snapshot(self.root),
                               "column-mapping")
-            for _ in range(self.max_retries):
-                head = _list_versions(self.root)
-                v = (head[-1] if head else 0) + 1
-                if _try_commit(self.root, v, entry):
-                    _maybe_checkpoint(self.root, v,
-                                      self.checkpoint_every)
-                    return
-            raise CommitConflict(
-                f"append lost the version race "
-                f"{self.max_retries} times under {self.root}")
+            _transact(self.root, lambda snap: entry, self.max_retries,
+                      self.checkpoint_every, "append")
 
         def abort(self, messages):
             for m in messages:
@@ -8415,9 +8333,6 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
             self.app_id = options.get("app_id", "stream")
 
         def commit(self, messages, batchId: int) -> None:
-            snap0 = snapshot(self.root)
-            if snap0["txn"].get(self.app_id, -1) >= batchId:
-                return  # replayed micro-batch: already committed
             adds = [a for m in messages if m is not None
                     for a in m.adds]
             entry = {"op": "stream-append", "ts": time.time(),
@@ -8425,39 +8340,35 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
                      "actions": [{"add": a} for a in adds]}
             if self._schema_rec is not None:
                 entry["schema"] = self._schema_rec
-            if self._new_cmap is not None and not self.overwrite:
+            if self._new_cmap is not None:
                 # schema evolution on a column-mapped table must
                 # re-record the mapping exactly like append() does
                 entry["colmap"] = self._new_cmap
-                _mark_feature(entry, snap0, "column-mapping")
+                _mark_feature(entry, snapshot(self.root),
+                              "column-mapping")
             if self._creating and self._spec:
                 entry["partition_by"] = self._spec
-            for attempt in range(self.max_retries):
-                if attempt:
-                    # a concurrent instance of the SAME app_id
-                    # (driver failover / zombie run) that passed the
-                    # entry check simultaneously may have won the
-                    # version race we just lost — re-read the txn
-                    # watermark before retrying or this batchId
-                    # lands twice, breaking exactly-once
-                    if snapshot(self.root)["txn"].get(
-                            self.app_id, -1) >= batchId:
-                        return
-                head = _list_versions(self.root)
-                v = (head[-1] if head else 0) + 1
-                if _try_commit(self.root, v, entry):
-                    _maybe_checkpoint(self.root, v,
-                                      self.checkpoint_every)
-                    # one writer instance serves every epoch of the
-                    # run: schema/colmap/layout are recorded by the
-                    # FIRST commit only
-                    self._schema_rec = None
-                    self._new_cmap = None
-                    self._creating = False
-                    return
-            raise CommitConflict(
-                f"stream batch {batchId} lost the version race "
-                f"{self.max_retries} times under {self.root}")
+            replayed = False
+
+            def plan(snap):
+                nonlocal replayed
+                # the watermark covers batchId on Spark's replay of
+                # a committed epoch, and also when a concurrent
+                # instance of the SAME app_id (driver failover /
+                # zombie run) won the version race we just lost —
+                # committing again would land this batchId twice
+                replayed = snap["txn"].get(self.app_id, -1) >= batchId
+                return snap["version"] if replayed else entry
+
+            _transact(self.root, plan, self.max_retries,
+                      self.checkpoint_every, f"stream batch {batchId}")
+            if not replayed:
+                # one writer instance serves every epoch of the run:
+                # schema/colmap/layout are recorded by the FIRST
+                # commit only
+                self._schema_rec = None
+                self._new_cmap = None
+                self._creating = False
 
         def abort(self, messages, batchId: int) -> None:
             TxLogBatchWriter.abort(self, messages)

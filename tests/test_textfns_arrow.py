@@ -45,14 +45,6 @@ def test_kr_hash_arrow_parity(corpus):
         assert r.jvm == r.vec, r.id
 
 
-def test_wide_hash_arrow_parity(corpus):
-    rows = (corpus.select(
-        "id", T.wide_hash(F.col("s")).alias("jvm"),
-        T.wide_hash_arrow(F.col("s")).alias("vec")).collect())
-    for r in rows:
-        assert r.jvm == r.vec, r.id
-
-
 @pytest.mark.parametrize("span_words", [2, 3, 10])
 def test_span_keys_arrow_parity(spark, span_words):
     rng = random.Random(99)
