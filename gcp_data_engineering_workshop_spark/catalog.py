@@ -1,8 +1,10 @@
 """Table catalog over the driver-provided parquet test tables.
 
-Explicit schemas are declared so reads never pay schema inference and
-so the parquet scan prunes to exactly the referenced columns
-(``ReadSchema`` in explain). At 100 TB these tables would be
+Each table file pays parquet schema inference (a one-task Spark job
+plus driver time) once: the inferred schema is cached per file
+identity and handed to later reads of the same file, which then plan
+without a job. The parquet scan still prunes to exactly the referenced
+columns (``ReadSchema`` in explain). At 100 TB these tables would be
 partitioned/bucketed on their join keys; loaders keep that contract in
 one place.
 """
@@ -10,9 +12,11 @@ one place.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -42,6 +46,26 @@ _NANO_TS_COLS = {
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Inferred schemas keyed on the file's identity (absolute path, size,
+# mtime, inode): a rewritten file gets a new key, so its next load
+# infers again. Inference reads only the file's footer, under the
+# parquet confs load_table pins before every read, so one entry serves
+# every session. Bounded: the oldest entry goes first past the cap.
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMA_CAP = 64
+
+
+def _file_key(path: str) -> tuple | None:
+    """Identity of a regular file, or None (missing path, directory
+    dataset) — those always infer."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino)
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one test table as a DataFrame."""
@@ -51,7 +75,17 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _file_key(path)
+    cached = _SCHEMAS.get(key)
+    if cached is not None:
+        df = spark.read.schema(cached).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key:
+            _SCHEMAS[key] = df.schema
+            while len(_SCHEMAS) > _SCHEMA_CAP:
+                del _SCHEMAS[next(iter(_SCHEMAS))]
     dtypes = dict(df.dtypes)
     for c in _NANO_TS_COLS.get(name, ()):
         # Only nano-precision columns surface as raw longs; micro

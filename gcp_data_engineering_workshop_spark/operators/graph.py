@@ -32,37 +32,30 @@ _cc_run_ids = itertools.count()
 
 
 # Edge count at or below this bound routes a CC run through the
-# single-task numpy path (one shuffle of the edge list to one task,
-# min-label + pointer jumping in-memory) instead of the iterative
-# driver-synchronized loop. The same adaptive-strategy principle as
+# driver numpy path (the cached edge list is read into the driver as
+# Arrow, min-label + pointer jumping run in-memory, the labels go back
+# as a local frame) instead of the iterative driver-synchronized loop.
+# The same adaptive-strategy principle as
 # spark.sql.autoBroadcastJoinThreshold: a graph whose EDGE LIST fits
-# one task's memory (~80 MB at the default 5M pairs) finishes in one
-# job instead of ~2 jobs x O(log diameter) rounds; past the bound the
-# distributed loop below is unchanged. Deterministic either way —
-# component = min node id is a unique fixed point, so both paths
+# driver memory (~80 MB at the default 5M pairs) finishes with one
+# cache read instead of ~2 jobs x O(log diameter) rounds; past the
+# bound the distributed loop below is unchanged. Deterministic either
+# way — component = min node id is a unique fixed point, so both paths
 # produce identical rows. 0 disables the local path entirely.
 _CC_LOCAL_EDGE_BOUND = 5_000_000
 
 
-def _cc_local_labels(batches):
-    """mapInArrow body for the single-task path: min-label
-    propagation with pointer jumping over the whole edge list in
-    numpy. Converges to label = min node id per component (the same
-    fixed point the distributed loop reaches)."""
+def _cc_local_labels(edges):
+    """The driver path's kernel: min-label propagation with pointer
+    jumping over an Arrow edge table (columns a, b) in numpy. Returns
+    the (node, label) Arrow table, label = min node id per component
+    (the same fixed point the distributed loop reaches)."""
     import numpy as np
     import pyarrow as pa
 
-    cols_a, cols_b = [], []
-    for b in batches:
-        cols_a.append(b.column(0).to_numpy(zero_copy_only=False))
-        cols_b.append(b.column(1).to_numpy(zero_copy_only=False))
-    if not cols_a:
-        return
-    a = np.concatenate(cols_a)
-    b = np.concatenate(cols_b)
+    a = edges.column("a").to_numpy()
+    b = edges.column("b").to_numpy()
     nodes = np.unique(np.concatenate([a, b]))
-    if not len(nodes):
-        return
     ai = np.searchsorted(nodes, a)
     bi = np.searchsorted(nodes, b)
     lab = np.arange(len(nodes), dtype=np.int64)
@@ -79,10 +72,8 @@ def _cc_local_labels(batches):
             lab = nxt
         if np.array_equal(lab, old):
             break
-    yield pa.RecordBatch.from_arrays(
-        [pa.array(nodes, type=pa.int64()),
-         pa.array(nodes[lab], type=pa.int64())],
-        ["node", "label"])
+    return pa.table({"node": pa.array(nodes, pa.int64()),
+                     "label": pa.array(nodes[lab], pa.int64())})
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
@@ -120,25 +111,28 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # first branch materializes it once and the mirror branch reads
     # the cache.
     e = register(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    # Size-gated single-task path (see _CC_LOCAL_EDGE_BOUND): the
-    # count materializes the projected-edge cache either way (the
+    # Size-gated driver path (see _CC_LOCAL_EDGE_BOUND): the count
+    # materializes the projected-edge cache either way (the
     # distributed loop's first round did exactly that), so the gate
-    # costs no extra pass over the upstream pair pipeline.
-    if (_CC_LOCAL_EDGE_BOUND > 0
-            and dict(e.dtypes).get("a") == "bigint"
-            and dict(e.dtypes).get("b") == "bigint"
-            and e.count() <= _CC_LOCAL_EDGE_BOUND):
-        labels = (e.repartition(1)
-                  .mapInArrow(_cc_local_labels,
-                              "node bigint, label bigint")
-                  .localCheckpoint(eager=True))
+    # costs no extra pass over the upstream pair pipeline, and the
+    # local arm's toArrow is a read of that cache.
+    dtypes = dict(e.dtypes)
+    n_edges = (e.count() if _CC_LOCAL_EDGE_BOUND > 0
+               and dtypes.get("a") == dtypes.get("b") == "bigint"
+               else None)
+    if stats is not None:
+        stats["bound"] = _CC_LOCAL_EDGE_BOUND
+        if n_edges is not None:
+            stats["edges"] = n_edges
+    if n_edges is not None and n_edges <= _CC_LOCAL_EDGE_BOUND:
+        labels = _cc_local_labels(e.toArrow())
+        release(e)
         if stats is not None:
             stats["rounds"] = 1
             stats["mode"] = "local"
-        release(e)
-        register(labels)
-        return labels.select(F.col("node").alias("doc_id"),
-                             F.col("label").alias("component"))
+        return (edges.sparkSession.createDataFrame(labels)
+                .select(F.col("node").alias("doc_id"),
+                        F.col("label").alias("component")))
     if stats is not None:
         stats["mode"] = "distributed"
     sym = register(e.union(e.select(F.col("b").alias("a"),

@@ -25,6 +25,18 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE re-plan cached plans too (Spark 4.1 defaults this off):
+    # an operator cache whose plan ends in a join or aggregate
+    # exchange is then stored at its coalesced partition count, not
+    # at shuffle.partitions, so every later scan of a KB-sized cache
+    # runs a few tasks instead of 32. Explicit repartition(n) /
+    # repartitionByRange(n, ...) shuffles are never coalesced, so the
+    # _pid ranges in operators/ids.py keep n parts. A plain session
+    # handed to __spark_entry__.entry (or selfcheck's
+    # SELFCHECK_VANILLA one) lacks this conf and keeps the uncoalesced
+    # caches; the per-file schema cache (catalog.py) and the
+    # driver-side local CC path (graph.py) do not depend on it.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Python data-source filter pushdown (4.1): lets the txlog batch
     # format's pushFilters see .where() conjuncts and plan only the

@@ -43,3 +43,25 @@ def test_eviction_only_loses_the_cache_not_correctness(spark):
     assert got == {1: 1, 2: 2, 3: 3}
     cachepool.clear()
     assert _n_persistent(spark) == 0
+
+
+def test_cached_aggregate_is_coalesced_explicit_ranges_are_not(spark):
+    """Session default canChangeCachedPlanOutputPartitioning: a pooled
+    aggregate over tiny input is stored at AQE's coalesced partition
+    count, while an explicit repartitionByRange(n) keeps n ranges, so
+    the _pid pinning in ids.py still sees 0..n-1."""
+    spark.catalog.clearCache()
+    cachepool.clear()
+    df = spark.createDataFrame([(v % 5, v) for v in range(200)],
+                               "k bigint, v bigint")
+    agg = cachepool.register(df.groupBy("k").count())
+    assert agg.count() == 5
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert agg.rdd.getNumPartitions() < shuffle_parts
+    out = assign_global_ids(df, ["v"], n_parts=4)
+    parted = cachepool._POOL[-1]
+    assert "_pid" in parted.columns
+    assert {r._pid for r in parted.select("_pid").distinct().collect()} \
+        == {0, 1, 2, 3}
+    assert sorted(r.global_id for r in out.collect()) == list(range(1, 201))
+    cachepool.clear()

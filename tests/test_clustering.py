@@ -269,7 +269,7 @@ def test_logistic_fit_matches_numpy_gd(spark, sf_dir):
 def test_cc_pointer_jumping_on_long_chain(spark, monkeypatch):
     """A 64-node path graph must converge in O(log n) rounds (plain
     propagation would take ~63), with exact components. Forces the
-    DISTRIBUTED path — the r15 single-task gate would otherwise
+    DISTRIBUTED path — the r15 local (driver-side) gate would otherwise
     absorb a graph this small (its parity has its own test)."""
     from gcp_data_engineering_workshop_spark.operators import graph
     monkeypatch.setattr(graph, "_CC_LOCAL_EDGE_BOUND", 0)

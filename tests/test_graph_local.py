@@ -1,4 +1,4 @@
-"""Parity: the r15 size-gated single-task CC path must produce
+"""Parity: the r15 size-gated driver-side CC path must produce
 exactly the distributed loop's rows (component = min node id is a
 unique fixed point — both algorithms converge to it)."""
 
@@ -75,3 +75,20 @@ def test_cc_local_non_bigint_falls_back(spark):
            for r in graph.connected_components(df, stats=stats).collect()}
     assert out == {(1, 1), (2, 1), (3, 1)}
     assert stats["mode"] == "distributed"
+
+
+def test_cc_local_regime_leaves_no_cache(spark):
+    """The local regime runs in the driver: it pools no frame (the
+    edge cache it counts is released) and records its gate inputs."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "doc_a bigint, doc_b bigint")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    stats = {}
+    out = {(r.doc_id, r.component)
+           for r in graph.connected_components(df, stats=stats).collect()}
+    assert out == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    assert jsc.getPersistentRDDs().size() == before
+    assert stats["mode"] == "local"
+    assert stats["edges"] == 3
+    assert stats["bound"] == graph._CC_LOCAL_EDGE_BOUND
