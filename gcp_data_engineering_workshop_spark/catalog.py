@@ -102,9 +102,3 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None,
                 names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     """Load several tables at once: {name: DataFrame}."""
     return {n: load_table(spark, n, sf_dir) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register all tables as temp views for spark.sql() use."""
-    for n in TABLES:
-        load_table(spark, n, sf_dir).createOrReplaceTempView(n)

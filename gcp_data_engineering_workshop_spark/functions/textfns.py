@@ -49,10 +49,6 @@ def words(col) -> Column:
     return F.split(normalize(col), " ")
 
 
-def word_set(col) -> Column:
-    return F.array_distinct(words(col))
-
-
 def shingles_of(ws: Column, n: int = 3) -> Column:
     """Distinct n-word shingles from an ALREADY-MATERIALIZED word
     array column. Keep the tokenization in its own projection: inside
@@ -96,12 +92,6 @@ def _kr_fold(c: Column, base: int, mod: int) -> Column:
         F.lit(0).cast("bigint"),
         lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
     )
-
-
-def kr_hash2(col) -> Column:
-    """Second independent Karp-Rabin channel (base 131 mod 2^31-19)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _kr_fold(c, KR2_BASE, KR2_MOD)
 
 
 def wide_hash(col) -> Column:

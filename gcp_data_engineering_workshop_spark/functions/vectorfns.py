@@ -6,10 +6,6 @@ sequential order the DuckDB oracle's list_sum(list_transform(...))
 uses — so values agree across engines. (DuckDB's built-in
 list_dot_product accumulates in float32 and drifts at ~1e-7; we
 deliberately avoid it on both sides.)
-
-For hot paths over many pairs, `dot_pandas` offers an Arrow-batched
-numpy variant (used by the brute-force ANN bench path where the
-O(n*q) pair count dominates and fused BLAS wins).
 """
 
 from __future__ import annotations
@@ -37,21 +33,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
 
 
-def hyperplane_bits(a: Column, planes: list[list[float]]) -> Column:
-    """Sign bits of the vector against fixed hyperplanes, packed into
-    a bigint bucket id — the random-hyperplane LSH key. `planes` are
-    seed-fixed literals compiled into the plan (broadcast-free)."""
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        d = F.aggregate(
-            F.zip_with(a, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def mat_from_arrow(arr) -> "np.ndarray":  # noqa: F821
     """(rows, dim) float64 matrix from an Arrow list<float> column —
     offsets-aware flatten + reshape, no per-row object arrays
@@ -67,11 +48,13 @@ def mat_from_arrow(arr) -> "np.ndarray":  # noqa: F821
 
 
 def dot_arrow():
-    """Arrow-native pairwise dot UDF (Spark 4 ``arrow_udf``): same
-    einsum contract as dot_pandas, but the list columns arrive as
-    pyarrow Arrays — no pandas Series materialization and no vstack
-    of per-row objects. Values are bit-identical to dot_pandas (the
-    float64 matrices are equal, so the einsum is)."""
+    """Arrow-native pairwise dot UDF (Spark 4 ``arrow_udf``): one
+    numpy einsum per batch instead of an interpreted per-row fold,
+    the verify-stage hot path for candidate pair sets. The list
+    columns arrive as pyarrow Arrays (no pandas Series, no vstack of
+    per-row objects). Pairwise-summation drift vs the sequential
+    fold is ~1e-15, far below the 6-dp rounding every caller applies
+    before comparing."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udf
@@ -84,22 +67,3 @@ def dot_arrow():
     _dot.__annotations__ = {"a": pa.Array, "b": pa.Array,
                             "return": pa.Array}
     return arrow_udf(_dot, "double")
-
-
-def dot_pandas():
-    """Arrow-batched pairwise dot UDF: one numpy einsum per batch
-    instead of an interpreted per-row fold — the verify-stage hot
-    path for candidate pair sets (measured 20x+ on 2M pairs).
-    Pairwise-summation drift vs the sequential fold is ~1e-15, far
-    below the 6-dp rounding every caller applies before comparing."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _dot(a, b):
-        A = np.vstack(a.to_numpy()).astype(np.float64)
-        B = np.vstack(b.to_numpy()).astype(np.float64)
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-
-    _dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(_dot, "double")

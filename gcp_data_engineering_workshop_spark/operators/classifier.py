@@ -25,10 +25,42 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# logistic_fit routes through a single driver-local numpy loop when
-# n * (dim + 1) stays at or below this bound (the kmeans gate's
-# principle — operators/clustering.py). 0 disables the local path.
+from gcp_data_engineering_workshop_spark.operators import gate
+
+# logistic_fit runs its rounds over one driver matrix when
+# n * (dim + 1) is at most this many scalars; operators/gate.py
+# states the rule.
 _LOGREG_LOCAL_SCALARS = 8_000_000
+
+
+def _feature_rows(batches):
+    """(X, y) per non-empty Arrow batch (a table works as one batch):
+    the float64 feature matrix and the label vector."""
+    from gcp_data_engineering_workshop_spark.functions.vectorfns import (
+        mat_from_arrow)
+
+    for b in batches:
+        if b.num_rows:
+            yield (mat_from_arrow(
+                       b.column(b.schema.get_field_index("features"))),
+                   b.column(b.schema.get_field_index("label"))
+                   .to_numpy(zero_copy_only=False))
+
+
+def _gradient_sums(parts, w: np.ndarray) -> tuple[np.ndarray, int]:
+    """One GD round's sums over the (X, y) pairs in ``parts``: the
+    (dim+1,) sum of (sigmoid(w.x + b) - y) * [x, 1] and the row
+    count. The driver regime passes its one matrix, each distributed
+    partial its partition's batches."""
+    dim = len(w) - 1
+    g = np.zeros(dim + 1)
+    n = 0
+    for X, y in parts:
+        s = 1.0 / (1.0 + np.exp(-(X @ w[:dim] + w[dim])))
+        g[:dim] += (s - y) @ X
+        g[dim] += (s - y).sum()
+        n += len(y)
+    return g, n
 
 
 def logistic_fit(feats: DataFrame, dim: int, n_iter: int = 5,
@@ -38,95 +70,61 @@ def logistic_fit(feats: DataFrame, dim: int, n_iter: int = 5,
     (columns: features array<double> of length ``dim``, label
     double in {0, 1}). Returns the (dim+1,) weight vector, bias
     LAST. Gradient = mean over rows of (sigmoid(w.x + b) - y) * [x, 1];
-    weights round to ``round_dp`` decimals after every step."""
-    import pyarrow as pa
-    from gcp_data_engineering_workshop_spark.functions.vectorfns import (
-        mat_from_arrow)
+    weights round to ``round_dp`` decimals after every step.
 
+    DRIVER REGIME (operators/gate.py, the kmeans_fit principle): when
+    the feature matrix fits one driver buffer, one Arrow collect
+    pulls it and every round runs ``_gradient_sums`` on it; past the
+    bound each round's partials run the same kernel per batch. The
+    update and its rounding are shared, and the weights are
+    identical by the decimal contract above: the ONLY cross-regime
+    difference is partial-sum order, and the per-step 1e-6 rounding
+    is ~10 orders coarser than reorder drift (the argument that lets
+    the DuckDB oracle replay the descent, and that makes the row
+    order of the driver table irrelevant). ``stats`` records the
+    gate's "regime", "bound" and "n"; "combine_rows" is recorded by
+    the distributed regime only (it is the size of a frame the
+    driver regime never builds)."""
     w = np.zeros(dim + 1)
     base = feats.select("features", F.col("label").cast("double")
                         .alias("label"))
+    tb = gate.driver_table(base, _LOGREG_LOCAL_SCALARS // (dim + 1), stats)
+    if tb is not None:
+        parts = list(_feature_rows([tb]))
 
-    # SIZE-GATED LOCAL PATH (r15; the kmeans-fit gate's principle):
-    # when the feature matrix fits one driver buffer, ONE Arrow
-    # collect pulls it and all n_iter GD rounds run locally. The
-    # produced weights are identical by the decimal contract above —
-    # the ONLY cross-path difference is partial-sum order, and the
-    # per-step 1e-6 rounding is ~10 orders coarser than reorder
-    # drift (the same argument that lets the DuckDB oracle replay
-    # the descent). Past the gate the distributed loop below (~2
-    # driver-synchronized jobs per round) is unchanged; ``stats``
-    # records "fit_mode"; "combine_rows" is distributed-only (it is
-    # the size of a frame the local path never builds).
-    # r16 (VERDICT r15 #4): ONE bounded limit(bound+1) Arrow collect
-    # decides the gate AND delivers the matrix — no full count()
-    # action before the choice (the kmeans_fit probe's fusion; see
-    # clustering.py for the decision-equivalence and row-order
-    # arguments — here order-independence is the per-step 1e-6
-    # weight grid vs partial-sum reorder drift).
-    if _LOGREG_LOCAL_SCALARS > 0:
-        bound_rows = _LOGREG_LOCAL_SCALARS // (dim + 1)
-        tb = base.limit(bound_rows + 1).toArrow()
+        def round_sums(wv):
+            return _gradient_sums(parts, wv)
     else:
-        tb = None
-    if tb is not None and tb.num_rows <= bound_rows:
-        if stats is not None:
-            stats["fit_mode"] = "local"
-        n = tb.num_rows
-        if n == 0:
-            # the distributed rounds would leave w at the zero
-            # vector (g = 0, n = 0 every step)
-            return np.round(w, round_dp)
-        X = mat_from_arrow(tb.column("features"))
-        y = tb.column("label").to_numpy(zero_copy_only=False)
-        for _ in range(n_iter):
-            z = X @ w[:dim] + w[dim]
-            s = 1.0 / (1.0 + np.exp(-z))
-            g = np.concatenate([(s - y) @ X, [(s - y).sum()]])
-            w = np.round(w - lr * g / max(n, 1), round_dp)
-        return w
-    if stats is not None:
-        stats["fit_mode"] = "distributed"
+        import pyarrow as pa
 
-    def partials(wv):
-        def fn(batches):
+        def round_sums(wv):
+            def partial(batches):
+                g, n = _gradient_sums(_feature_rows(batches), wv)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.arange(dim + 1, dtype=np.int32)),
+                     pa.array(g, type=pa.float64()),
+                     pa.array(np.full(dim + 1, n, dtype=np.int64))],
+                    ["dim_idx", "val", "cnt"])
+
+            rows = (base.mapInArrow(
+                partial, "dim_idx int, val double, cnt bigint")
+                # combine partials in the cluster: one exchange of
+                # <= n_parts * (dim+1) tiny rows down to dim+1
+                .groupBy("dim_idx")
+                .agg(F.sum("val").alias("val"), F.sum("cnt").alias("cnt"))
+                .collect())
+            if stats is not None:
+                stats["combine_rows"] = max(stats.get("combine_rows", 0),
+                                            len(rows))
             g = np.zeros(dim + 1)
             n = 0
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                X = mat_from_arrow(
-                    b.column(b.schema.get_field_index("features")))
-                y = b.column(b.schema.get_field_index("label")) \
-                    .to_numpy(zero_copy_only=False)
-                z = X @ wv[:dim] + wv[dim]
-                s = 1.0 / (1.0 + np.exp(-z))
-                g[:dim] += (s - y) @ X
-                g[dim] += (s - y).sum()
-                n += len(y)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.arange(dim + 1, dtype=np.int32)),
-                 pa.array(g, type=pa.float64()),
-                 pa.array(np.full(dim + 1, n, dtype=np.int64))],
-                ["dim_idx", "val", "cnt"])
-        return fn
+            for r in rows:
+                g[r.dim_idx] = r.val
+                n = r.cnt
+            return g, n
 
     for _ in range(n_iter):
-        rows = (base.mapInArrow(
-            partials(w), "dim_idx int, val double, cnt bigint")
-            # combine partials in the cluster: one exchange of
-            # <= n_parts * (dim+1) tiny rows down to dim+1
-            .groupBy("dim_idx")
-            .agg(F.sum("val").alias("val"), F.sum("cnt").alias("cnt"))
-            .collect())
-        if stats is not None:
-            stats["combine_rows"] = max(stats.get("combine_rows", 0),
-                                        len(rows))
-        g = np.zeros(dim + 1)
-        n = 0
-        for r in rows:
-            g[r.dim_idx] = r.val
-            n = r.cnt
+        g, n = round_sums(w)
         w = np.round(w - lr * g / max(n, 1), round_dp)
     return w
 

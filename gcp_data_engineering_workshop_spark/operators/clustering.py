@@ -30,13 +30,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcp_data_engineering_workshop_spark.operators import gate
 
 _ASSIGN_SCHEMA = "vec_id bigint, cluster_id int, d2 double"
 
-# kmeans_fit routes through a single driver-local numpy loop when
-# n * dim stays at or below this bound (64 MB of float64 at the
-# default) — see the kmeans_fit docstring for the exactness
-# argument. 0 disables the local path entirely.
+# kmeans_fit runs its rounds over one driver matrix when n * dim is
+# at most this many scalars (64 MB of float64); operators/gate.py
+# states the rule, the kmeans_fit docstring the exactness argument.
 _KMEANS_LOCAL_SCALARS = 8_000_000
 
 
@@ -52,6 +52,32 @@ def _d2_matrix(X: np.ndarray, cent: np.ndarray) -> np.ndarray:
           + np.einsum("ij,ij->i", cent, cent)[None, :]
           - 2.0 * (X @ cent.T))
     return np.maximum(d2, 0.0)
+
+
+def _embedding_mats(batches):
+    """The float64 (rows, dim) matrix of the embedding column of each
+    non-empty Arrow batch (a table works as one batch)."""
+    from gcp_data_engineering_workshop_spark.functions.vectorfns import (
+        mat_from_arrow)
+
+    for b in batches:
+        if b.num_rows:
+            yield mat_from_arrow(b.column(b.schema.get_field_index("embedding")))
+
+
+def _lloyd_sums(mats, cent: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One Lloyd round's sums: every row of every matrix in ``mats``
+    joins its nearest centroid (unrounded _d2_matrix argmin, first
+    minimum on ties). Returns the per-cluster row sums (k, dim) and
+    row counts (k,). The driver regime passes its one matrix, each
+    distributed partial its partition's batches."""
+    k, dim = cent.shape
+    s = np.zeros((k, dim)); n = np.zeros(k, dtype=np.int64)
+    for X in mats:
+        a = _d2_matrix(X, cent).argmin(axis=1)
+        n += np.bincount(a, minlength=k)
+        np.add.at(s, a, X)
+    return s, n
 
 
 def seed_centroids(emb: DataFrame, k: int) -> np.ndarray:
@@ -148,116 +174,76 @@ def kmeans_fit(emb: DataFrame, k: int = 8, n_iter: int = 5,
     M-step frame ever collected — pytest asserts it is k * dim — and
     "fit_rounds", the number of E/M rounds actually executed.
 
-    SIZE-GATED LOCAL PATH (r15 optimization, the connected-
-    components gate's principle): when the embedding matrix fits
-    one driver buffer (n * dim <= _KMEANS_LOCAL_SCALARS,
-    default 8M scalars = 64 MB float64; 0 disables), ONE Arrow
-    collect pulls it and all n_iter Lloyd rounds run in numpy —
-    identical E-step (_d2_matrix argmin, unrounded, first-min
-    ties), identical M-step (per-cluster mean rounded to the same
-    grid, empty clusters keep their centroid), identical early
-    exit. The produced centroids are the same by the decimal
-    contract above: the ONLY cross-path difference is float
-    summation order, and order-independence on the 1e-3 grid is
-    already what lets the DuckDB oracle (a third summation order)
-    replay the fit bit-for-bit. Past the gate the distributed loop
-    below is unchanged — the ~2 driver-synchronized jobs per round
-    it replaces are the dominant cost of a bench-scale fit, while
-    a 100 TB corpus blows through the gate and never collects.
-    ``stats``: "fit_mode" records which path ran; "combine_rows"
-    is recorded by the distributed path only (it is the size of a
-    frame the local path never builds)."""
+    DRIVER REGIME (operators/gate.py): when the embedding matrix
+    fits one driver buffer (n * dim <= _KMEANS_LOCAL_SCALARS), one
+    Arrow collect pulls it and every round runs the same
+    ``_lloyd_sums`` kernel on it that the distributed partials run
+    per batch; the M-step, its rounding, the early exit and
+    "fit_rounds" are shared. The centroids are the same by the
+    decimal contract above: the ONLY cross-regime difference is
+    float summation order, and order-independence on the 1e-3 grid
+    is already what lets the DuckDB oracle (a third summation order)
+    replay the fit bit-for-bit. The ~2 driver-synchronized jobs per
+    round the driver regime saves are the dominant cost of a
+    bench-scale fit, while a 100 TB corpus blows through the bound
+    and never collects. ``stats`` also records the gate's "regime",
+    "bound" and "n"; "combine_rows" is recorded by the distributed
+    regime only (it is the size of a frame the driver regime never
+    builds)."""
     cent = seed_centroids(emb, k)
     dim = cent.shape[1]
     base = emb.select("vec_id", "embedding")
+    # Row order within the driver table is irrelevant: the rounds
+    # consume the multiset (argmin per row, per-cluster means on the
+    # 1e-3 grid), the order-independence the decimal contract gives.
+    tb = gate.driver_table(base.select("embedding"),
+                           _KMEANS_LOCAL_SCALARS // dim, stats)
+    if tb is not None:
+        mats = list(_embedding_mats([tb]))
 
-    # r16 (VERDICT r15 #3/#4): the gate probe no longer runs a full
-    # count() before choosing — ONE bounded limit(bound+1) Arrow
-    # collect both DECIDES the gate and DELIVERS the matrix. On the
-    # local path that is one action where count+collect were two; on
-    # the at-scale path CollectLimit reads partitions incrementally
-    # until bound+1 rows exist (first partitions only), never the
-    # whole corpus. Decision identical: n*dim <= LIMIT iff
-    # n <= LIMIT div dim iff the limited collect holds <= that many
-    # rows. Row ORDER within the collect is irrelevant — the local
-    # rounds consume the multiset (argmin per row, per-cluster means
-    # on the 1e-3 grid), the same order-independence the decimal
-    # contract already guarantees.
-    if _KMEANS_LOCAL_SCALARS > 0:
-        bound_rows = _KMEANS_LOCAL_SCALARS // dim
-        probe = base.select("embedding").limit(bound_rows + 1).toArrow()
+        def round_sums(c):
+            return _lloyd_sums(mats, c)
     else:
-        probe = None
-    if probe is not None and probe.num_rows <= bound_rows:
-        from gcp_data_engineering_workshop_spark.functions.vectorfns import (
-            mat_from_arrow)
-
-        X = mat_from_arrow(probe.column("embedding"))
-        if stats is not None:
-            stats["fit_mode"] = "local"
-        for it in range(n_iter):
-            a = _d2_matrix(X, cent).argmin(axis=1)
-            n = np.bincount(a, minlength=k)
-            s = np.zeros((k, dim))
-            np.add.at(s, a, X)
-            if stats is not None:
-                stats["fit_rounds"] = it + 1
-            nz = n > 0
-            new_cent = cent.copy()
-            new_cent[nz] = np.round(s[nz] / n[nz, None], round_dp)
-            if np.array_equal(new_cent, cent):
-                break
-            cent = new_cent
-        return kmeans_assign(emb, cent=cent), cent
-    if stats is not None:
-        stats["fit_mode"] = "distributed"
-
-    def partials(c):
         import pyarrow as pa
-        from gcp_data_engineering_workshop_spark.functions.vectorfns import (
-            mat_from_arrow)
 
-        def fn(batches):
+        def round_sums(c):
+            def partial(batches):
+                s, n = _lloyd_sums(_embedding_mats(batches), c)
+                # FLAT scalar rows (cluster, dim, val) — no nested
+                # Arrow types in the partial frame; bounded at k*dim
+                # rows per partition regardless of input size
+                nz = np.flatnonzero(n)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.repeat(nz, dim).astype(np.int32)),
+                     pa.array(np.tile(np.arange(dim, dtype=np.int32),
+                                      len(nz))),
+                     pa.array(s[nz].ravel(), type=pa.float64()),
+                     pa.array(np.repeat(n[nz], dim), type=pa.int64())],
+                    ["cluster_id", "dim_idx", "val", "cnt"])
+
+            rows = (base.mapInArrow(
+                partial, "cluster_id int, dim_idx int, val double, cnt bigint")
+                # combine the partials in the CLUSTER, not on the
+                # driver: one exchange of <= n_parts * k * dim tiny
+                # rows down to k * dim — the only rows the driver
+                # ever sees
+                .groupBy("cluster_id", "dim_idx")
+                .agg(F.sum("val").alias("val"), F.sum("cnt").alias("cnt"))
+                .collect())
+            if stats is not None:
+                stats["combine_rows"] = max(stats.get("combine_rows", 0),
+                                            len(rows))
             s = np.zeros((k, dim)); n = np.zeros(k, dtype=np.int64)
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                X = mat_from_arrow(
-                    b.column(b.schema.get_field_index("embedding")))
-                a = _d2_matrix(X, c).argmin(axis=1)
-                n += np.bincount(a, minlength=k)
-                np.add.at(s, a, X)
-            # FLAT scalar rows (cluster, dim, val) — no nested Arrow
-            # types in the partial frame; bounded at k*dim rows per
-            # partition regardless of input size
-            nz = np.flatnonzero(n)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(nz, dim).astype(np.int32)),
-                 pa.array(np.tile(np.arange(dim, dtype=np.int32), len(nz))),
-                 pa.array(s[nz].ravel(), type=pa.float64()),
-                 pa.array(np.repeat(n[nz], dim), type=pa.int64())],
-                ["cluster_id", "dim_idx", "val", "cnt"])
-        return fn
+            for r in rows:
+                s[r.cluster_id, r.dim_idx] = r.val
+                if r.dim_idx == 0:
+                    n[r.cluster_id] = r.cnt
+            return s, n
 
     for it in range(n_iter):
-        rows = (base.mapInArrow(
-            partials(cent),
-            "cluster_id int, dim_idx int, val double, cnt bigint")
-            # combine the partials in the CLUSTER, not on the driver:
-            # one exchange of <= n_parts * k * dim tiny rows down to
-            # k * dim — the only rows the driver ever sees
-            .groupBy("cluster_id", "dim_idx")
-            .agg(F.sum("val").alias("val"), F.sum("cnt").alias("cnt"))
-            .collect())
+        s, n = round_sums(cent)
         if stats is not None:
-            stats["combine_rows"] = max(stats.get("combine_rows", 0),
-                                        len(rows))
             stats["fit_rounds"] = it + 1
-        s = np.zeros((k, dim)); n = np.zeros(k, dtype=np.int64)
-        for r in rows:
-            s[r.cluster_id, r.dim_idx] = r.val
-            if r.dim_idx == 0:
-                n[r.cluster_id] = r.cnt
         nz = n > 0
         new_cent = cent.copy()
         new_cent[nz] = np.round(s[nz] / n[nz, None], round_dp)

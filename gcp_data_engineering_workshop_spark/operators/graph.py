@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 import itertools
 
+from gcp_data_engineering_workshop_spark.operators import gate
 from gcp_data_engineering_workshop_spark.operators.cachepool import (
     register, release)
 
@@ -31,17 +32,10 @@ from gcp_data_engineering_workshop_spark.operators.cachepool import (
 _cc_run_ids = itertools.count()
 
 
-# Edge count at or below this bound routes a CC run through the
-# driver numpy path (the cached edge list is read into the driver as
-# Arrow, min-label + pointer jumping run in-memory, the labels go back
-# as a local frame) instead of the iterative driver-synchronized loop.
-# The same adaptive-strategy principle as
-# spark.sql.autoBroadcastJoinThreshold: a graph whose EDGE LIST fits
-# driver memory (~80 MB at the default 5M pairs) finishes with one
-# cache read instead of ~2 jobs x O(log diameter) rounds; past the
-# bound the distributed loop below is unchanged. Deterministic either
-# way — component = min node id is a unique fixed point, so both paths
-# produce identical rows. 0 disables the local path entirely.
+# Edge lists of at most this many edges (~80 MB) run the driver
+# kernel below instead of the distributed loop; operators/gate.py
+# states the rule. Both regimes reach the same unique fixed point
+# (component = min node id), so they produce identical rows.
 _CC_LOCAL_EDGE_BOUND = 5_000_000
 
 
@@ -76,6 +70,30 @@ def _cc_local_labels(edges):
                      "label": pa.array(nodes[lab], pa.int64())})
 
 
+def _plan_leaf(df: DataFrame) -> DataFrame:
+    """``df`` behind a one-node logical plan: a LogicalRDD over the
+    RDD of its physical plan, carrying its statistics (what
+    ``localCheckpoint`` builds, minus the checkpointed copy).
+
+    The iterative loop below cuts its lineage every round: with the
+    pointer-jump self-join the logical plan references the round's
+    frame twice and the previous labels a third time, so uncut it
+    grows ~5x per round and Catalyst analysis OOMs the driver within
+    a handful of rounds (observed on a 64-node chain). A local
+    checkpoint would cut it too, but its blocks are the only copy of
+    the data: they stay in the session's persistent RDDs (a cache
+    clear does not free them), and a frame read after they are freed
+    fails. Over ``df``'s cache the leaf reads the cache; once the
+    cache is released it recomputes through the RDD lineage (whose
+    materialized shuffles are reused), like any evicted frame."""
+    jvm, jdf = df.sparkSession._jvm, df._jdf
+    leaf = getattr(getattr(jvm.org.apache.spark.sql.execution,
+                           "LogicalRDD$"), "MODULE$").fromDataset(
+        jdf.queryExecution().toRdd(), jdf, False)
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df.sparkSession._jsparkSession, leaf), df.sparkSession)
+
+
 def connected_components(edges: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b", max_iter: int = 20,
                          stats: dict | None = None) -> DataFrame:
@@ -93,7 +111,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     driver-synchronized rounds of fixed job overhead (measured ~170s
     at sf0.1; 5 rounds after the jump). The jump is one extra
     self-join per round over the tiny label frame — always worth an
-    exponential cut in round count. ``stats`` records "rounds".
+    exponential cut in round count. ``stats`` records "rounds" and
+    the size gate's "regime", "bound" and "n" (operators/gate.py).
 
     A SECOND jump per round (label(label(label(label)))) was measured
     and REJECTED: on the sf0.1 capstone it nearly doubled
@@ -111,35 +130,29 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # first branch materializes it once and the mirror branch reads
     # the cache.
     e = register(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    # Size-gated driver path (see _CC_LOCAL_EDGE_BOUND): the count
-    # materializes the projected-edge cache either way (the
-    # distributed loop's first round did exactly that), so the gate
-    # costs no extra pass over the upstream pair pipeline, and the
-    # local arm's toArrow is a read of that cache.
+    # The count materializes the projected-edge cache, which the
+    # distributed loop's first round would do anyway, and the local
+    # regime's read is a read of that cache. The driver kernel labels
+    # int64 ids, so other id types never run local (and are not
+    # counted).
     dtypes = dict(e.dtypes)
-    n_edges = (e.count() if _CC_LOCAL_EDGE_BOUND > 0
-               and dtypes.get("a") == dtypes.get("b") == "bigint"
-               else None)
-    if stats is not None:
-        stats["bound"] = _CC_LOCAL_EDGE_BOUND
-        if n_edges is not None:
-            stats["edges"] = n_edges
-    if n_edges is not None and n_edges <= _CC_LOCAL_EDGE_BOUND:
-        labels = _cc_local_labels(e.toArrow())
+    bigint = dtypes.get("a") == dtypes.get("b") == "bigint"
+    et = gate.driver_table(e, _CC_LOCAL_EDGE_BOUND if bigint else -1,
+                           stats, n=e.count() if bigint else None)
+    if et is not None:
+        labels = _cc_local_labels(et)
         release(e)
         if stats is not None:
             stats["rounds"] = 1
-            stats["mode"] = "local"
         return (edges.sparkSession.createDataFrame(labels)
                 .select(F.col("node").alias("doc_id"),
                         F.col("label").alias("component")))
-    if stats is not None:
-        stats["mode"] = "distributed"
     sym = register(e.union(e.select(F.col("b").alias("a"),
                                     F.col("a").alias("b"))))
     labels = register(sym.select(F.col("a").alias("node"))
                       .distinct()
                       .withColumn("label", F.col("node")))
+    held = labels  # the persisted frame `labels` reads
     run_id = next(_cc_run_ids)
     for i in range(max_iter):
         neighbor_min = (
@@ -204,24 +217,16 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         # the superseded round's labels are never read again — free
         # the executor memory (and its pool slot, for the initial
         # registered frame) instead of accumulating one per round
-        release(labels)
-        # Cut the lineage EVERY round: with the pointer-jump self-
-        # join the logical plan references the round's frame twice
-        # and the previous labels a third time, so un-truncated it
-        # grows ~5x per round — Catalyst analysis OOMs the driver
-        # within a handful of rounds (observed on a 64-node chain).
-        # localCheckpoint reads the just-populated cache (tiny,
-        # |nodes| rows), so the extra job is negligible; the
-        # checkpointed copy then replaces the cache entry.
-        labels = new_labels.localCheckpoint(eager=True)
-        release(new_labels)
+        release(held)
+        held = new_labels
+        labels = _plan_leaf(new_labels)
         if changed == 0:
             break
     # the edge caches are dead once the final labels materialized —
-    # only the label frame the returned plan reads stays pooled, so
+    # only the label cache the returned plan reads stays pooled, so
     # a CC run parks exactly ONE frame in the session pool
     release(sym)
-    register(labels)
+    register(held)
     return labels.select(F.col("node").alias("doc_id"),
                          F.col("label").alias("component"))
 

@@ -13,13 +13,14 @@ from pyspark.sql import functions as F
 from gcp_data_engineering_workshop_spark.catalog import load_table
 from gcp_data_engineering_workshop_spark.functions import textfns as T
 from gcp_data_engineering_workshop_spark.operators import dedup as D
+from gcp_data_engineering_workshop_spark.operators import gate
 from gcp_data_engineering_workshop_spark.operators import multimodal as M
 from gcp_data_engineering_workshop_spark.operators import similarity as S
 
-# pagerank_knn routes its power iteration through a single
-# driver-local int64 numpy loop when the kNN edge list (k * n rows)
-# is at or below this bound — exact arithmetic, so the local and
-# distributed rounds are bit-identical. 0 disables the local path.
+# pagerank_knn runs its power iteration as one driver int64 numpy
+# loop when the kNN edge list (k * n rows) has at most this many
+# edges; operators/gate.py states the rule. The arithmetic is exact,
+# so both regimes' rounds are bit-identical.
 _PR_LOCAL_EDGE_BOUND = 5_000_000
 
 
@@ -2785,19 +2786,14 @@ def pagerank_knn(spark: SparkSession, sf_dir: str, k: int = 5,
     nodes = register(emb.select("vec_id"))
     n = nodes.count()
     teleport = (3 * SCALE) // (20 * n)
-    # r15 size-gated local iteration (the connected-components
-    # gate's principle): the rounds are EXACT int64 arithmetic, so
-    # a driver-local replay is bit-identical by construction — no
-    # rounding contract even needed. When the edge list fits one
-    # bounded collect (k * n rows of two bigints; same env-knob
-    # family as the CC gate, 0 disables), pull it once and run all
-    # n_iter rounds in numpy instead of ~3 driver-synchronized
-    # jobs per round. Past the gate the distributed loop below is
-    # unchanged (at 100 TB the kNN edge list is billions of rows).
-    if _PR_LOCAL_EDGE_BOUND > 0 and n * k <= _PR_LOCAL_EDGE_BOUND:
+    # The rounds are EXACT int64 arithmetic, so the driver replay is
+    # bit-identical by construction; it saves ~3 driver-synchronized
+    # jobs per round (at 100 TB the kNN edge list is billions of rows
+    # and the distributed loop below runs).
+    et = gate.driver_table(edges, _PR_LOCAL_EDGE_BOUND, n=n * k)
+    if et is not None:
         import numpy as np
 
-        et = edges.toArrow()
         q = et.column("query_id").to_numpy(zero_copy_only=False)
         nb = et.column("neighbor_id").to_numpy(zero_copy_only=False)
         ids = np.sort(nodes.toArrow().column("vec_id")

@@ -96,6 +96,8 @@ _utc = _tz.utc
 
 from pyspark.sql import DataFrame
 
+from gcp_data_engineering_workshop_spark.operators import gate
+
 LOG_DIR = "_txlog"
 _W = 20  # zero-padded version width
 
@@ -3066,15 +3068,13 @@ _DV_DIR = "_dv"
 # anti-join AQE can still re-plan.
 _DV_BROADCAST_BOUND = 2_000_000
 
-# r15 optimization: when a dv commit's CUMULATIVE sidecar (new
-# matches + carried old vectors — the exact row count is known from
-# the per-file counts BEFORE anything is written) fits this bound,
-# the positions are collected in one narrow Arrow job and the
-# sidecar parquet is written driver-side — no repartition exchange,
-# no distributed write job. The bound is exact, the collect is the
-# same bounded-metadata class as the merge planner's survivor sets
-# (~16 MB of (file, pos) rows per million positions). Past it the
-# unchanged distributed write runs. 0 disables the local path.
+# A dv commit whose CUMULATIVE sidecar (new matches + carried old
+# vectors; the per-file counts give the exact row count before
+# anything is written) has at most this many positions writes the
+# sidecar parquet driver-side from one narrow Arrow collect (~16 MB
+# of (file, pos) rows per million positions) instead of a
+# repartition exchange and a distributed write; operators/gate.py
+# states the rule.
 _DV_LOCAL_POSITIONS = 4_000_000
 
 # OPTIMIZE rewrites (purges) a dv-carrying file once this fraction
@@ -4751,23 +4751,18 @@ def _dv_mark_actions(spark, root: str, snap: dict,
                     + (old_refs.get(os.path.basename(p), {})
                        .get("deleted", 0))
                     for p in keep_touched)
-        if _DV_LOCAL_POSITIONS > 0 and total <= _DV_LOCAL_POSITIONS:
-            # r15 size-gated local sidecar write: the cumulative
-            # row count is EXACTLY `total` (new hits + carried old
-            # vectors, both already counted), so the bound check is
-            # exact before any byte moves. One narrow Arrow collect
-            # of the new matches; the carried old vectors are read
-            # driver-side from their sidecar parquet (local files,
-            # columns file/pos only) — identical row SET to the
-            # distributed union, and readers only ever anti-join
-            # the set. Past the gate: the unchanged distributed
-            # repartition+write below.
+        new_tb = gate.driver_table(out, _DV_LOCAL_POSITIONS, n=total)
+        if new_tb is not None:
+            # The carried old vectors are read driver-side from their
+            # sidecar parquet (local files, columns file/pos only):
+            # the identical row SET to the distributed union, and
+            # readers only ever anti-join the set.
             import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as _pq
             schema = pa.schema([("file", pa.string()),
                                 ("pos", pa.int64())])
-            tabs = [out.toArrow().cast(schema)]
+            tabs = [new_tb.cast(schema)]
             # same restriction as _dv_table: rows for the files
             # whose CURRENT ref points at the old sidecars
             ref_names = pa.array(sorted(old_refs), type=pa.string())

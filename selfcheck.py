@@ -70,14 +70,20 @@ def rows_equal(a, b):
 def main():
     import __spark_entry__ as entry_mod
 
+    # Result lines start at column 0 even when stdout and stderr share
+    # a log file: stdout is line-buffered, and Spark's console progress
+    # bar (redrawn with \r on stderr, never newline-terminated) is off.
+    sys.stdout.reconfigure(line_buffering=True)
+    quiet = {"spark.ui.showConsoleProgress": "false"}
     if os.environ.get("SELFCHECK_VANILLA"):
         # Driver-conditions probe: a bare session with none of our
         # session.py confs (the real driver builds its own session).
         from pyspark.sql import SparkSession
-        spark = SparkSession.builder.master("local[8]").getOrCreate()
+        spark = (SparkSession.builder.master("local[8]")
+                 .config(map=quiet).getOrCreate())
     else:
         from gcp_data_engineering_workshop_spark.session import get_spark
-        spark = get_spark("selfcheck")
+        spark = get_spark("selfcheck", extra_conf=quiet)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -86,21 +86,26 @@ def test_kmeans_fit_collect_is_k_dim_bounded(spark, sf_dir,
     _, cent = C.kmeans_fit(emb, k=8, n_iter=2, stats=stats)
     assert cent.shape == (8, 64)
     assert stats["combine_rows"] <= 8 * 64
-    assert stats["fit_mode"] == "distributed"
+    assert stats["regime"] == "distributed"
 
 
 def test_kmeans_fit_local_matches_distributed(spark, sf_dir,
                                               monkeypatch):
-    """The r15 size-gated local fit must produce the IDENTICAL
-    rounded centroid grid and round count as the distributed loop
-    (the decimal contract makes summation order invisible)."""
+    """The size-gated driver fit must produce the IDENTICAL rounded
+    centroid grid and round count as the distributed loop (the
+    decimal contract makes summation order invisible). The bound is
+    n * dim scalars (driver regime: the gate is <=), then one less."""
     emb = load_table(spark, "embeddings", sf_dir).repartition(16)
+    n = emb.count()
     s_loc, s_dist = {}, {}
+    monkeypatch.setattr(C, "_KMEANS_LOCAL_SCALARS", n * 64)
     _, c_loc = C.kmeans_fit(emb, k=8, n_iter=5, stats=s_loc)
-    assert s_loc["fit_mode"] == "local"
-    monkeypatch.setattr(C, "_KMEANS_LOCAL_SCALARS", 0)
+    assert s_loc["regime"] == "local"
+    assert s_loc["n"] == s_loc["bound"] == n
+    monkeypatch.setattr(C, "_KMEANS_LOCAL_SCALARS", n * 64 - 1)
     _, c_dist = C.kmeans_fit(emb, k=8, n_iter=5, stats=s_dist)
-    assert s_dist["fit_mode"] == "distributed"
+    assert s_dist["regime"] == "distributed"
+    assert s_dist["bound"] == n - 1
     assert np.array_equal(c_loc, c_dist)
     assert s_loc["fit_rounds"] == s_dist["fit_rounds"]
 
@@ -241,22 +246,32 @@ def test_logistic_fit_matches_numpy_gd(spark, sf_dir):
         s = 1.0 / (1.0 + np.exp(-(X @ ref[:4] + ref[4])))
         g = np.concatenate([(s - y) @ X, [(s - y).sum()]]) / len(y)
         ref = np.round(ref - 0.5 * g, 6)
-    # r15: force the DISTRIBUTED path for the combine-size contract
-    # (the size gate would take the local loop at this corpus)
+    # the DISTRIBUTED regime (bound one row short of the corpus) for
+    # the combine-size contract, then the driver regime at exactly
+    # n * (dim + 1) scalars (the gate is <=)
     import unittest.mock as _mock
-    with _mock.patch.object(CL, "_LOGREG_LOCAL_SCALARS", 0):
+    n = len(rows)
+    with _mock.patch.object(CL, "_LOGREG_LOCAL_SCALARS", n * 5 - 1):
         stats = {}
         got = CL.logistic_fit(feats.repartition(8), dim=4, n_iter=5,
                               stats=stats)
-    assert stats["fit_mode"] == "distributed"
+    assert stats["regime"] == "distributed"
+    assert stats["bound"] == n - 1
     assert stats["combine_rows"] <= 5
     assert np.array_equal(got, ref)
-    # the gated local path must produce the identical weights
+    # the gated driver regime must produce the identical weights
     stats_l = {}
-    got_l = CL.logistic_fit(feats.repartition(8), dim=4, n_iter=5,
-                            stats=stats_l)
-    assert stats_l["fit_mode"] == "local"
+    with _mock.patch.object(CL, "_LOGREG_LOCAL_SCALARS", n * 5):
+        got_l = CL.logistic_fit(feats.repartition(8), dim=4, n_iter=5,
+                                stats=stats_l)
+    assert stats_l["regime"] == "local"
+    assert stats_l["n"] == stats_l["bound"] == n
     assert np.array_equal(got_l, ref)
+    # empty input: the shared update leaves w at the zero vector
+    stats_e = {}
+    got_e = CL.logistic_fit(feats.limit(0), dim=4, n_iter=5, stats=stats_e)
+    assert stats_e["regime"] == "local" and stats_e["n"] == 0
+    assert np.array_equal(got_e, np.zeros(5))
     out = {r.doc_id: r.predicted
            for r in quality_classifier(spark, sf_dir).collect()}
     labels = {r.doc_id: bool(r.label) for r in rows}
@@ -283,7 +298,7 @@ def test_cc_pointer_jumping_on_long_chain(spark, monkeypatch):
     assert all(out[i] == 0 for i in range(64))
     assert out[100] == 100 and out[101] == 100
     assert stats["rounds"] <= 10  # ~log2(63) + slack; was 63
-    assert stats["mode"] == "distributed"
+    assert stats["regime"] == "distributed"
 
 
 def test_kmeans_fit_early_exit_is_fixed_point(spark):

@@ -34,6 +34,13 @@ def _reference_components(edges):
 
 
 def test_cc_local_matches_distributed_and_reference(spark, monkeypatch):
+    """Each case runs once with the bound at exactly its edge count
+    (driver regime: the gate is <=) and once at one less (the
+    distributed loop). The distributed run leaves nothing persisted
+    once the pool and the cache are cleared."""
+    from gcp_data_engineering_workshop_spark.operators import cachepool
+
+    jsc = spark.sparkContext._jsc
     rng = random.Random(42)
     cases = [
         [],  # no edges
@@ -49,20 +56,26 @@ def test_cc_local_matches_distributed_and_reference(spark, monkeypatch):
         if not edges:
             df = df.where("doc_a < 0")
         stats_l, stats_d = {}, {}
-        monkeypatch.setattr(graph, "_CC_LOCAL_EDGE_BOUND", 10_000_000)
+        monkeypatch.setattr(graph, "_CC_LOCAL_EDGE_BOUND", len(edges))
         local = {(r.doc_id, r.component)
                  for r in graph.connected_components(
                      df, stats=stats_l).collect()}
-        monkeypatch.setattr(graph, "_CC_LOCAL_EDGE_BOUND", 0)
+        monkeypatch.setattr(graph, "_CC_LOCAL_EDGE_BOUND", len(edges) - 1)
+        cachepool.clear()
+        spark.catalog.clearCache()
+        before = jsc.getPersistentRDDs().size()
         dist = {(r.doc_id, r.component)
                 for r in graph.connected_components(
                     df, stats=stats_d).collect()}
+        cachepool.clear()
+        spark.catalog.clearCache()
+        assert jsc.getPersistentRDDs().size() == before, f"case {i}"
         assert local == dist, f"case {i}"
         ref = set(_reference_components(edges).items())
         assert local == ref, f"case {i}"
-        if edges:
-            assert stats_l["mode"] == "local"
-            assert stats_d["mode"] == "distributed"
+        assert stats_l["regime"] == "local", f"case {i}"
+        assert stats_d["regime"] == "distributed", f"case {i}"
+        assert stats_l["n"] == stats_d["n"] == len(edges), f"case {i}"
 
 
 def test_cc_local_non_bigint_falls_back(spark):
@@ -74,7 +87,8 @@ def test_cc_local_non_bigint_falls_back(spark):
     out = {(r.doc_id, r.component)
            for r in graph.connected_components(df, stats=stats).collect()}
     assert out == {(1, 1), (2, 1), (3, 1)}
-    assert stats["mode"] == "distributed"
+    assert stats["regime"] == "distributed"
+    assert "n" not in stats  # decided without counting the edges
 
 
 def test_cc_local_regime_leaves_no_cache(spark):
@@ -89,6 +103,6 @@ def test_cc_local_regime_leaves_no_cache(spark):
            for r in graph.connected_components(df, stats=stats).collect()}
     assert out == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
     assert jsc.getPersistentRDDs().size() == before
-    assert stats["mode"] == "local"
-    assert stats["edges"] == 3
+    assert stats["regime"] == "local"
+    assert stats["n"] == 3
     assert stats["bound"] == graph._CC_LOCAL_EDGE_BOUND

@@ -397,14 +397,29 @@ def test_pagerank_knn_local_matches_distributed(spark, sf_dir,
     pr div k over in-edges; pr' = teleport + (17*mass) div 20, all
     values non-negative so python // == SQL div), and the final
     /1e12 is the same single IEEE op in both paths."""
+    from gcp_data_engineering_workshop_spark.catalog import load_table
+    from gcp_data_engineering_workshop_spark.operators import gate
     from gcp_data_engineering_workshop_spark.plans import textpipeline as tp
 
-    monkeypatch.setattr(tp, "_PR_LOCAL_EDGE_BOUND", 10_000_000)
+    # the gate sees k * n edges: the bound at exactly that (driver
+    # regime, the gate is <=) and one less (distributed loop)
+    seen = []
+    real = gate.driver_table
+
+    def spy(df, bound, stats=None, n=None):
+        tb = real(df, bound, stats, n=n)
+        seen.append((bound, n, tb is not None))
+        return tb
+
+    monkeypatch.setattr(gate, "driver_table", spy)
+    edges = 5 * load_table(spark, "embeddings", sf_dir).count()
+    monkeypatch.setattr(tp, "_PR_LOCAL_EDGE_BOUND", edges)
     local = {(r.vec_id, r.pagerank)
              for r in tp.pagerank_knn(spark, sf_dir).collect()}
-    monkeypatch.setattr(tp, "_PR_LOCAL_EDGE_BOUND", 0)
+    monkeypatch.setattr(tp, "_PR_LOCAL_EDGE_BOUND", edges - 1)
     dist = {(r.vec_id, r.pagerank)
             for r in tp.pagerank_knn(spark, sf_dir).collect()}
+    assert seen == [(edges, edges, True), (edges - 1, edges, False)]
     assert local == dist
 
 

@@ -11,7 +11,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gcp_data_engineering_workshop_spark.operators import gate
 from gcp_data_engineering_workshop_spark.sources import txlog as T
+
+_driver_table = gate.driver_table
 
 
 def _mk(spark, root, n=300, parts=3):
@@ -66,14 +69,37 @@ def _sidecar_rows(spark, root):
     return ids
 
 
+def _gate_spy(monkeypatch, offset=None):
+    """Record each dv gate decision made through the one helper as
+    (exact position count n, driver regime?), checking that the
+    caller passes the module bound. With ``offset`` the bound
+    becomes each commit's own n + offset (0: the driver regime, the
+    gate is <=; -1: the distributed write)."""
+    seen = []
+
+    def spy(df, bound, stats=None, n=None):
+        assert bound == T._DV_LOCAL_POSITIONS
+        if offset is not None:
+            bound = n + offset
+        tb = _driver_table(df, bound, stats, n=n)
+        seen.append((n, tb is not None))
+        return tb
+
+    monkeypatch.setattr(gate, "driver_table", spy)
+    return seen
+
+
 def test_dv_local_matches_distributed(spark, tmp_path, monkeypatch):
     roots = {}
-    for leg, bound in (("local", 10_000_000), ("dist", 0)):
-        monkeypatch.setattr(T, "_DV_LOCAL_POSITIONS", bound)
+    for leg, offset in (("local", 0), ("dist", -1)):
+        seen = _gate_spy(monkeypatch, offset)
         root = str(tmp_path / leg)
         _mk(spark, root)
         _run_verbs(spark, root)
         roots[leg] = (_state(spark, root), _sidecar_rows(spark, root))
+        # one gate decision per dv commit, all on the leg's side
+        assert len(seen) == 3
+        assert all(local == (offset == 0) for _, local in seen)
     (state_l, sc_l), (state_d, sc_d) = roots["local"], roots["dist"]
     assert state_l == state_d
     assert sc_l == sc_d
@@ -119,12 +145,20 @@ def test_dv_local_cumulative_and_full_file_drop(spark, tmp_path,
 
 def test_dv_distributed_fallback_past_gate(spark, tmp_path,
                                            monkeypatch):
-    """A bound smaller than the commit's cumulative sidecar forces
-    the distributed write; state stays identical."""
+    """The dv bound pinned from both sides on one table: a commit
+    of n positions at bound n - 1 takes the distributed write, the
+    next (cumulative) commit at a bound of exactly its n the driver
+    write; state stays exact."""
+    seen = _gate_spy(monkeypatch)
     root = str(tmp_path / "t")
-    monkeypatch.setattr(T, "_DV_LOCAL_POSITIONS", 3)
     T.append(spark.range(0, 100), root, checkpoint_every=0)
+    monkeypatch.setattr(T, "_DV_LOCAL_POSITIONS", 49)
     T.delete_where(spark, root, "id % 2 = 0", mode="dv",
-                   checkpoint_every=0)  # 50 positions > 3
+                   checkpoint_every=0)  # 50 positions > 49
+    # 25 new positions + the 50 carried by every touched file
+    monkeypatch.setattr(T, "_DV_LOCAL_POSITIONS", 75)
+    T.delete_where(spark, root, "id % 4 = 1", mode="dv",
+                   checkpoint_every=0)
     assert sorted(r.id for r in T.read(spark, root).collect()) == \
-        list(range(1, 100, 2))
+        list(range(3, 100, 4))
+    assert seen == [(50, False), (75, True)]
