@@ -37,12 +37,15 @@ def mat_from_arrow(arr) -> "np.ndarray":  # noqa: F821
     """(rows, dim) float64 matrix from an Arrow list<float> column —
     offsets-aware flatten + reshape, no per-row object arrays
     (measured ~1.7x faster than the pandas-Series vstack path at
-    1M x 64; the gap is pure conversion, it grows with batch size)."""
+    1M x 64; the gap is pure conversion, it grows with batch size).
+    An empty column has no dim to infer: it maps to a (0, 0) matrix."""
     import numpy as np
     import pyarrow as pa
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    if len(arr) == 0:
+        return np.zeros((0, 0), dtype=np.float64)
     return (arr.flatten().to_numpy(zero_copy_only=False)
             .astype(np.float64).reshape(len(arr), -1))
 

@@ -52,8 +52,7 @@ import zlib
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, DataSourceStreamReader,
-    DataSourceWriter, InputPartition,
-    SimpleDataSourceStreamReader, WriterCommitMessage)
+    DataSourceWriter, InputPartition, WriterCommitMessage)
 
 MAGIC = b"Obj\x01"
 
@@ -271,32 +270,6 @@ def scan_block_offsets(path: str) -> list[tuple[int, int]]:
     return out
 
 
-def read_blocks(path: str, start: int, end: int):
-    """Decode rows from every block whose header starts in
-    [start, end)."""
-    with open(path, "rb") as fh:
-        schema, codec, sync = read_header(fh)
-        codec_obj = _RecordCodec(schema)
-        # start=0 (or anything inside the header) means "from the
-        # first data block" — the header has just been consumed
-        fh.seek(max(start, fh.tell()))
-        while fh.tell() < end:
-            try:
-                n_rec = _read_long_from(fh)
-            except EOFError:
-                break
-            n_bytes = _read_long_from(fh)
-            payload = fh.read(n_bytes)
-            if codec == "deflate":
-                payload = zlib.decompress(payload, wbits=-15)
-            if fh.read(16) != sync:
-                raise ValueError(f"sync marker mismatch in {path}")
-            pos = 0
-            for _ in range(n_rec):
-                row, pos = codec_obj.decode(payload, pos)
-                yield row
-
-
 NUMERIC = {"int", "long", "float", "double"}
 
 
@@ -451,26 +424,10 @@ class AvroLiteDataSource(DataSource):
         return avro_schema_to_ddl(schema)
 
     def reader(self, schema) -> "AvroLiteReader":
-        from pyspark.sql import SparkSession
-
-        sess = SparkSession.getActiveSession()
-        enabled = (sess is not None and sess.conf.get(
-            "spark.sql.python.filterPushdown.enabled", "false")
-            == "true")
-        cls = AvroLitePushdownReader if enabled else AvroLiteReader
-        return cls(self.options)
+        return AvroLiteReader(self.options)
 
     def streamReader(self, schema) -> "AvroLiteParallelStreamReader":
-        if str(self.options.get("use_simple_reader",
-                                "false")).lower() == "true":
-            from pyspark.errors import PySparkNotImplementedError
-            raise PySparkNotImplementedError(  # -> simple fallback
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"})
         return AvroLiteParallelStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> "AvroLiteStreamReader":
-        return AvroLiteStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> "AvroLiteWriter":
         path = self.options["path"]
@@ -520,15 +477,62 @@ def _block_may_match(ranges: dict, pushed: list) -> bool:
     return True
 
 
+def _file_blocks(f: str, pushed=()) -> list[tuple[int, int]]:
+    """[(offset, approx_bytes)] of the blocks of ``f`` SURVIVING the
+    pushed filters — from the stats sidecar when present (no data
+    IO), else the block-header scan (no pruning possible)."""
+    stats_path = f + ".stats.json"
+    if not os.path.exists(stats_path):
+        return [(off, 1) for off, _n in scan_block_offsets(f)]
+    blocks = json.load(open(stats_path))["blocks"]
+    out = []
+    for i, b in enumerate(blocks):
+        if pushed and not _block_may_match(b.get("ranges", {}), pushed):
+            continue
+        nxt = (blocks[i + 1]["offset"] if i + 1 < len(blocks)
+               else os.path.getsize(f))
+        out.append((b["offset"], nxt - b["offset"]))
+    return out
+
+
+def _plan_blocks(files, pack_bytes: int, pushed=()) -> list:
+    """The surviving blocks of each file, grouped into InputPartitions
+    of ~``pack_bytes`` (a group never spans two files). Shared by the
+    batch and stream readers; an empty plan still needs one (empty)
+    partition."""
+    parts = []
+    for f in files:
+        group: list[int] = []
+        acc = 0
+        for off, nbytes in _file_blocks(f, pushed):
+            group.append(off)
+            acc += nbytes
+            if acc >= pack_bytes:
+                parts.append(InputPartition((f, tuple(group))))
+                group, acc = [], 0
+        if group:
+            parts.append(InputPartition((f, tuple(group))))
+    return parts or [InputPartition((None, ()))]
+
+
+def _read_partition(partition):
+    f, offsets = partition.value
+    if f is not None:
+        yield from read_blocks_at(f, offsets)
+
+
 class AvroLiteReader(DataSourceReader):
     """Batch reader: block-splittable, with FILTER PUSHDOWN against
     the writer's per-block zone maps. pushFilters keeps the
     supported range comparisons on numeric AND string fields for
-    PRUNING but
-    returns every filter as residual — Spark re-applies them, so
-    pruning only has to be conservative (never drop a block that
-    could match), exactly the parquet row-group-statistics
-    contract."""
+    PRUNING but returns every filter as residual — Spark re-applies
+    them, so pruning only has to be conservative (never drop a block
+    that could match), exactly the parquet row-group-statistics
+    contract. Because the reader implements pushFilters, Spark
+    refuses it with DATA_SOURCE_PUSHDOWN_DISABLED unless
+    ``spark.sql.python.filterPushdown.enabled`` is true (session.py
+    sets it). The conf cannot be probed here: Spark calls
+    ``reader()`` in a planner worker that has no active session."""
 
     def __init__(self, options):
         self.path = options["path"]
@@ -536,67 +540,43 @@ class AvroLiteReader(DataSourceReader):
             options.get("partition_bytes", 32 << 20))
         self._pushed: list = []
 
-    def _file_blocks(self, f: str) -> list[tuple[int, int]]:
-        """[(offset, approx_bytes)] of blocks SURVIVING the pushed
-        filters — from the stats sidecar when present (no data IO),
-        else the block-header scan (no pruning possible)."""
-        stats_path = f + ".stats.json"
-        if os.path.exists(stats_path):
-            blocks = json.load(open(stats_path))["blocks"]
-            out = []
-            for i, b in enumerate(blocks):
-                if self._pushed and not _block_may_match(
-                        b.get("ranges", {}), self._pushed):
-                    continue
-                nxt = (blocks[i + 1]["offset"] if i + 1 < len(blocks)
-                       else os.path.getsize(f))
-                out.append((b["offset"], nxt - b["offset"]))
-            return out
-        return [(off, 1) for off, _n in scan_block_offsets(f)]
+    def pushFilters(self, filters):
+        for f in filters:
+            kind = type(f).__name__
+            if (kind in _RANGE_FILTERS
+                    and len(f.attribute) == 1
+                    and isinstance(f.value, (int, float, str))
+                    and not isinstance(f.value, bool)):
+                self._pushed.append((kind, f.attribute[0], f.value))
+        return filters  # all residual: Spark re-applies (exactness)
 
     def partitions(self):
-        parts = []
-        for f in _data_files(self.path):
-            group: list[int] = []
-            acc = 0
-            for off, nbytes in self._file_blocks(f):
-                group.append(off)
-                acc += nbytes
-                if acc >= self.partition_bytes:
-                    parts.append(InputPartition((f, tuple(group))))
-                    group, acc = [], 0
-            if group:
-                parts.append(InputPartition((f, tuple(group))))
-        # an empty dataset still needs one (empty) partition
-        return parts or [InputPartition((None, ()))]
+        return _plan_blocks(_data_files(self.path),
+                            self.partition_bytes, self._pushed)
 
     def read(self, partition):
-        f, offsets = partition.value
-        if f is None:
-            return
-        yield from read_blocks_at(f, offsets)
+        return _read_partition(partition)
 
 
 class AvroLiteParallelStreamReader(DataSourceStreamReader):
-    """E21 streaming twin on the FULL DataSourceStreamReader API
-    (r11 — the same upgrade D27's txlogstream got): the driver
-    plans only METADATA — the batch's new files split into block
-    groups packed to ~partition_bytes, block offsets from the
+    """E21's stream reader: tail a directory of container files —
+    the landing-zone ingestion pattern (an upstream system drops
+    .avro loads; the stream picks up each file exactly once). The
+    driver plans only METADATA — the batch's new files split into
+    block groups packed to ~partition_bytes, block offsets from the
     writer's stats sidecar when present (zero data IO) else one
     header-skipping scan — and ``read(partition)`` decodes the
     blocks ON THE EXECUTORS via read_blocks_at. A multi-gigabyte
-    landing-zone drop streams through as many parallel tasks as it
-    has block groups; no row transits the driver (the Simple
-    reader materialized every batch's rows there — it stays as the
-    ``use_simple_reader`` fallback and parity twin).
+    drop streams through as many parallel tasks as it has block
+    groups; no row transits the driver. Unknown options are
+    ignored.
 
-    Offsets count files in (mtime, name) order — the same contract
-    as the Simple reader: files are immutable once visible and new
-    files form a stable suffix (the writer's task-file + _SUCCESS
-    protocol satisfies it). Restart safety: Spark checkpoints the
-    planned offsets and re-hands them to partitions(); the file
-    list slice [lo:hi) is stable under the suffix contract, so a
-    replanned batch is byte-identical."""
+    Offsets count files in (mtime, name) order: files are immutable
+    once visible and new files form a stable suffix (the writer's
+    task-file + _SUCCESS protocol satisfies it). Restart safety:
+    Spark checkpoints the planned offsets and re-hands them to
+    partitions(); the file list slice [lo:hi) is stable under the
+    suffix contract, so a replanned batch is byte-identical."""
 
     def __init__(self, options):
         self.path = options["path"]
@@ -612,108 +592,15 @@ class AvroLiteParallelStreamReader(DataSourceStreamReader):
     def latestOffset(self):
         return {"n": len(self._files())}
 
-    def _blocks(self, f: str) -> list[tuple[int, int]]:
-        stats_path = f + ".stats.json"
-        if os.path.exists(stats_path):
-            blocks = json.load(open(stats_path))["blocks"]
-            out = []
-            for i, b in enumerate(blocks):
-                nxt = (blocks[i + 1]["offset"] if i + 1 < len(blocks)
-                       else os.path.getsize(f))
-                out.append((b["offset"], nxt - b["offset"]))
-            return out
-        return [(off, 1) for off, _n in scan_block_offsets(f)]
-
     def partitions(self, start, end):
-        parts = []
-        for f in self._files()[start["n"]:end["n"]]:
-            group: list[int] = []
-            acc = 0
-            for off, nbytes in self._blocks(f):
-                group.append(off)
-                acc += nbytes
-                if acc >= self.pack_bytes:
-                    parts.append(InputPartition((f, tuple(group))))
-                    group, acc = [], 0
-            if group:
-                parts.append(InputPartition((f, tuple(group))))
-        # a batch whose files hold zero data blocks still needs one
-        # (empty) partition — same guard as the batch reader
-        return parts or [InputPartition((None, ()))]
+        return _plan_blocks(self._files()[start["n"]:end["n"]],
+                            self.pack_bytes)
 
     def read(self, partition):
-        f, offsets = partition.value
-        if f is None:
-            return
-        yield from read_blocks_at(f, offsets)
+        return _read_partition(partition)
 
     def commit(self, end):
         pass
-
-
-class AvroLiteStreamReader(SimpleDataSourceStreamReader):
-    """E21 streaming twin: tail a directory of container files —
-    the landing-zone ingestion pattern (an upstream system drops
-    .avro loads; the stream picks up each file exactly once).
-
-    Offsets count files in (mtime, name) order, so files appended
-    after the last batch form a stable suffix; the standard
-    file-source contract applies (files are immutable once visible
-    — the writer's task-file + rename-free protocol satisfies it
-    because _SUCCESS lands after every part file is closed).
-    ``read(start)`` derives everything from the committed offset
-    Spark hands back (restart-safe, same argument as
-    BarReplayStreamReader); ``readBetweenOffsets`` replays a
-    planned batch for exactly-once recovery."""
-
-    def __init__(self, options):
-        self.path = options["path"]
-
-    def _files(self) -> list[str]:
-        return sorted(_data_files(self.path),
-                      key=lambda f: (os.path.getmtime(f), f))
-
-    def _rows(self, files):
-        # materialized: the simple-reader API snapshots (copies) the
-        # returned iterator for replay, so it must not be a generator;
-        # per-batch driver materialization is the documented tradeoff
-        # of this API class (same as BarReplayStreamReader)
-        out = []
-        for f in files:
-            out.extend(read_blocks(f, 0, os.path.getsize(f)))
-        return out
-
-    def initialOffset(self):
-        return {"n": 0}
-
-    def read(self, start):
-        files = self._files()
-        lo = start["n"]
-        return iter(self._rows(files[lo:])), {"n": len(files)}
-
-    def readBetweenOffsets(self, start, end):
-        return iter(self._rows(self._files()[start["n"]:end["n"]]))
-
-    def commit(self, end):
-        pass
-
-
-class AvroLitePushdownReader(AvroLiteReader):
-    """AvroLiteReader + pushFilters. Separate class because Spark
-    REFUSES any reader that overrides pushFilters while
-    spark.sql.python.filterPushdown.enabled is false — the
-    DataSource picks this subclass only when the session conf is on
-    (see AvroLiteDataSource.reader)."""
-
-    def pushFilters(self, filters):
-        for f in filters:
-            kind = type(f).__name__
-            if (kind in _RANGE_FILTERS
-                    and len(f.attribute) == 1
-                    and isinstance(f.value, (int, float, str))
-                    and not isinstance(f.value, bool)):
-                self._pushed.append((kind, f.attribute[0], f.value))
-        return filters  # all residual: Spark re-applies (exactness)
 
 
 class _FileCommit(WriterCommitMessage):

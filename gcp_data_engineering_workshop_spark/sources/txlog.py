@@ -90,9 +90,6 @@ import tempfile
 import time
 import uuid
 from collections.abc import MutableMapping
-from datetime import timezone as _tz
-
-_utc = _tz.utc
 
 from pyspark.sql import DataFrame
 
@@ -6536,8 +6533,8 @@ def _plan_window(root: str, lo: int, hi: int,
                  ignore_changes: bool) -> list[tuple[int, str, list]]:
     """The stream-op plan for versions (lo, hi]: a list of
     (version, op, [(relative path, bytes), ...]) for every commit
-    that EMITS files, under the op contract both stream readers
-    share (the Delta readStream contract, rebuilt):
+    that EMITS files, under TxLogParallelStreamReader's op contract
+    (the Delta readStream contract, rebuilt):
 
     - append / stream-append: emitted (exact row-level increments).
     - optimize: SKIPPED — a re-layout changes no data; its add
@@ -6727,35 +6724,6 @@ def _dv_positions(dv_dir: str | None, basename: str) -> set:
     return set(t.column("pos").to_pylist())
 
 
-def _stream_fields(root: str, snap: dict | None = None):
-    """(field names, tz-aware timestamp field names) for the stream
-    row shape — from the RECORDED log schema when one exists (every
-    table written since schema tracking; valid even while the live
-    file set is empty, which is exactly the bronze-bootstrap case —
-    VERDICT r10 What's-wrong #2), else from one live file's footer.
-    Pass ``snap`` to pin an already-resolved snapshot instead of
-    re-reading the log."""
-    if snap is None:
-        snap = snapshot(root)
-    if snap.get("schema"):
-        from pyspark.sql.types import StructType as _ST
-        st = _ST.fromJson(json.loads(snap["schema"]))
-        return ([f.name for f in st.fields],
-                {f.name for f in st.fields
-                 if f.dataType.typeName() == "timestamp"})
-    if not snap["files"]:
-        raise ValueError(
-            "txlogstream: empty table with no recorded schema "
-            f"under {root}; commit data first")
-    import pyarrow.parquet as pq
-    first = sorted(snap["files"])[0]
-    sch = pq.ParquetFile(os.path.join(root, first)).schema_arrow
-    return ([f.name for f in sch],
-            {f.name for f in sch
-             if str(f.type).startswith("timestamp")
-             and "tz=" in str(f.type)})
-
-
 try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
     from pyspark.sql.datasource import (DataSource,
                                         DataSourceArrowWriter,
@@ -6763,7 +6731,6 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
                                         DataSourceStreamArrowWriter,
                                         DataSourceStreamReader,
                                         InputPartition,
-                                        SimpleDataSourceStreamReader,
                                         WriterCommitMessage)
 
     class TxLogFilePartition(InputPartition):
@@ -6786,13 +6753,12 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
             self.colmap = colmap or {}
 
     class TxLogParallelStreamReader(DataSourceStreamReader):
-        """readStream FROM the transaction-log table on the FULL
-        DataSourceStreamReader API — the source twin of
+        """readStream FROM the transaction-log table — the one
+        stream reader of format("txlogstream") and
+        readStream.format("txlog"), and the source twin of
         stream_sink() (together they chain table-to-table streaming
-        pipelines with exactly-once on both edges), and the r11
-        replacement for the Simple-API reader that materialized
-        every micro-batch's rows on the driver (VERDICT r10
-        What's-wrong #1, the round's one `weak`).
+        pipelines with exactly-once on both edges). Partitioned and
+        column-mapped tables stream too.
 
         Offsets ARE log versions: batch (start_v, head_v] emits the
         add files of the window's commits, so the stream's progress
@@ -6827,7 +6793,8 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
         pattern), so both the fresh catch-up and the
         post-restart recovery are exactly capped. Without a
         reader_id the first batch of each run is uncapped and every
-        subsequent one capped (documented fallback). The cursor
+        subsequent one capped, so the cap holds exactly across
+        restarts only when reader_id is set. The cursor
         only ever bounds the batch END from above the true base —
         a stale/ahead cursor degrades bounding, never correctness;
         use one reader_id per query checkpoint.
@@ -6843,10 +6810,10 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
         byte-identically on restart. Composes with the version cap
         (versions bound first, bytes slice within).
 
-        Op semantics are _plan_window()'s contract (shared with the
-        Simple fallback reader): append/stream-append emitted,
-        optimize skipped, merge/overwrite/restore raise
-        NonAppendChange unless ignore_changes=true."""
+        Op semantics are _plan_window()'s contract:
+        append/stream-append emitted, optimize skipped,
+        merge/overwrite/restore raise NonAppendChange unless
+        ignore_changes=true."""
 
         _DEFAULT_PACK = 128 * 1024 * 1024
 
@@ -6880,7 +6847,10 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
             # schema, colmap epoch and version window disagree
             if snap is None:
                 snap = snapshot(self.root)
-            _stream_fields(self.root, snap)  # schema resolvable?
+            if not snap.get("schema") and not snap["files"]:
+                raise ValueError(
+                    "txlogstream: empty table with no recorded "
+                    f"schema under {self.root}; commit data first")
             # column mapping bound at open time (see
             # TxLogFilePartition.colmap)
             self._colmap = snap.get("colmap") or {}
@@ -7032,95 +7002,15 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
                            "f": end.get("f", 0)}, fh)
             os.replace(tmp, self._cursor_path())
 
-    class TxLogStreamReader(SimpleDataSourceStreamReader):
-        """The SIMPLE-API fallback reader (driver-side rows — the
-        documented tradeoff of SimpleDataSourceStreamReader, same
-        as the avrolite tail and BarReplay sources). The DEFAULT
-        path is TxLogParallelStreamReader above; this one stays for
-        .option("use_simple_reader", "true"), for environments
-        without the full-API wire, and as the parity twin the tests
-        compare the parallel reader against. Offsets, op contract
-        (via the shared _plan_window) and admission control match
-        the parallel reader batch-for-batch; read(start) receives
-        the committed start offset directly, so the cap here is
-        exact across restarts. max_bytes_per_trigger is a
-        parallel-reader feature: this reader plans whole versions
-        only, so do NOT switch a checkpointed bytes-capped query
-        to use_simple_reader mid-history — a partial ("f"-cursor)
-        offset would resume at the version boundary."""
-
-        def __init__(self, options):
-            self.root = options["path"]
-            self.start_v = int(options.get("starting_version", 0))
-            self.ignore_changes = (
-                str(options.get("ignore_changes", "false")).lower()
-                == "true")
-            self.cap = int(options.get("max_versions_per_trigger", 0))
-            snap0 = snapshot(self.root)
-            if snap0.get("partition_by"):
-                raise ValueError(
-                    "txlogstream: the simple (driver-side) reader "
-                    "does not materialize hive partition columns; "
-                    "use the default parallel reader for a "
-                    "partitioned table")
-            if snap0.get("colmap"):
-                raise ValueError(
-                    "txlogstream: the simple (driver-side) reader "
-                    "does not translate column-mapped (renamed) "
-                    "physical names; use the default parallel "
-                    "reader")
-            self._fields, self._tz_fields = _stream_fields(self.root)
-
-        def _rows(self, lo: int, hi: int):
-            import pyarrow.parquet as pq
-
-            out = []
-            for _v, _op, adds in _plan_window(
-                    self.root, lo, hi, self.ignore_changes):
-                for rel, _nbytes, _part in adds:
-                    tbl = pq.read_table(os.path.join(self.root, rel))
-                    for rec in tbl.to_pylist():
-                        # rec.get: a file predating an evolved
-                        # column yields None for it (the same
-                        # NULL-backfill projection read() applies).
-                        # TIMESTAMP (LTZ) fields: parquet stores
-                        # UTC-normalized micros; arrow may hand
-                        # back tz-naive datetimes, which the row
-                        # converter refuses — pin UTC explicitly.
-                        out.append(tuple(
-                            v.replace(tzinfo=_utc)
-                            if (f in self._tz_fields
-                                and v is not None
-                                and v.tzinfo is None) else v
-                            for f in self._fields
-                            for v in (rec.get(f),)))
-            return out
-
-        def initialOffset(self):
-            return {"v": self.start_v}
-
-        def read(self, start):
-            versions = _list_versions(self.root)
-            head = versions[-1] if versions else start["v"]
-            if self.cap:
-                head = min(head, start["v"] + self.cap)
-            head = max(head, start["v"])
-            return iter(self._rows(start["v"], head)), {"v": head}
-
-        def readBetweenOffsets(self, start, end):
-            return iter(self._rows(start["v"], end["v"]))
-
-        def commit(self, end):
-            pass
-
     class TxLogStreamDataSource(DataSource):
         """spark.readStream.format("txlogstream").option("path", root)
         — register with spark.dataSource.register(TxLogStreamDataSource).
 
         Options: path (required), starting_version,
         ignore_changes, max_versions_per_trigger,
-        partition_bytes (full reader's file-group pack target),
-        use_simple_reader (force the driver-side fallback)."""
+        max_bytes_per_trigger, reader_id, partition_bytes (the
+        file-group pack target). The one reader is
+        TxLogParallelStreamReader; unknown options are ignored."""
 
         @classmethod
         def name(cls) -> str:
@@ -7148,16 +7038,7 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
                 os.path.join(self.options["path"], first))
 
         def streamReader(self, schema) -> TxLogParallelStreamReader:
-            if str(self.options.get("use_simple_reader",
-                                    "false")).lower() == "true":
-                from pyspark.errors import PySparkNotImplementedError
-                raise PySparkNotImplementedError(  # -> simple fallback
-                    errorClass="NOT_IMPLEMENTED",
-                    messageParameters={"feature": "streamReader"})
             return TxLogParallelStreamReader(self.options, schema)
-
-        def simpleStreamReader(self, schema) -> TxLogStreamReader:
-            return TxLogStreamReader(self.options)
 
     _CDF_META = ("_commit_version", "_commit_op", "_change_type")
 
@@ -7669,7 +7550,9 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
         a pushFilters-implementing reader otherwise) —
         ``.option("pushdown", "false")`` drops to the plain
         reader for sessions that cannot enable the conf (correct,
-        just unpruned)."""
+        just unpruned). It stays an option rather than a probe of
+        that conf because Spark calls reader() in a planner worker
+        with no active session, where the conf cannot be seen."""
 
         @classmethod
         def name(cls) -> str:
@@ -7720,11 +7603,9 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
 
         def streamReader(self, schema) -> TxLogParallelStreamReader:
             # ONE format name serves the whole matrix:
-            # readStream.format("txlog") is txlogstream's parallel
-            # reader verbatim (same options/contract; the dedicated
-            # name remains for existing pipelines). The Simple
-            # fallback stays txlogstream-only — this surface is
-            # executor-parallel, full stop.
+            # readStream.format("txlog") is txlogstream's reader
+            # verbatim (same options/contract; the dedicated name
+            # remains for existing pipelines).
             return TxLogParallelStreamReader(self.options, schema)
 
     class TxLogWriteMessage(WriterCommitMessage):
@@ -8371,7 +8252,6 @@ try:  # pyspark.sql.datasource needs an active PySpark >= 4 install
 except ImportError:  # pragma: no cover - pyspark<4 fallback
     TxLogFilePartition = None  # type: ignore[assignment]
     TxLogParallelStreamReader = None  # type: ignore[assignment]
-    TxLogStreamReader = None  # type: ignore[assignment]
     TxLogStreamDataSource = None  # type: ignore[assignment]
     TxLogCdfPartition = None  # type: ignore[assignment]
     TxLogCdfStreamReader = None  # type: ignore[assignment]

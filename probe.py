@@ -333,15 +333,17 @@ def run_avrolite_zonemap_leg(spark) -> dict:
     """r8 task #3's second owed leg: an avrolite container with 50
     blocks, a range predicate selecting ~2 of them, and the
     BLOCKS-OPENED counter from the reader's own planning path
-    (AvroLitePushdownReader.partitions()) — plus wall time of the
-    pruned vs unpruned read through the real Spark plan. The
+    (AvroLiteReader.partitions()) — plus wall time of the pruned
+    read vs the same range written so the reader cannot push it
+    (``id % 500000`` is ``id`` here; Catalyst folds ``id + 0``
+    back to ``id``, so that spelling would still prune). The
     string-zone-map twin runs the same shape on an ISO-date string
     column (this round's E21 extension)."""
     from pyspark.sql import functions as F
     from pyspark.sql.datasource import (GreaterThanOrEqual, LessThan)
 
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
-        AvroLiteDataSource, AvroLitePushdownReader)
+        AvroLiteDataSource, AvroLiteReader)
 
     spark.dataSource.register(AvroLiteDataSource)
     d = os.path.join(WORK, "avroprobe")
@@ -356,10 +358,10 @@ def run_avrolite_zonemap_leg(spark) -> dict:
          .option("records_per_block", "10000").mode("append").save())
         open(os.path.join(d, "_DONE"), "w").write("")
     row: dict = {}
-    full = AvroLitePushdownReader({"path": d})
+    full = AvroLiteReader({"path": d})
     blocks_total = sum(len(p.value[1]) for p in full.partitions())
     # numeric range: 2 of 50 blocks
-    rn = AvroLitePushdownReader({"path": d})
+    rn = AvroLiteReader({"path": d})
     rn.pushFilters([GreaterThanOrEqual(("id",), 200_000),
                     LessThan(("id",), 220_000)])
     row["blocks_total"] = blocks_total
@@ -367,7 +369,7 @@ def run_avrolite_zonemap_leg(spark) -> dict:
         len(p.value[1]) for p in rn.partitions())
     # string (ISO date) range: same selectivity through the string
     # zone maps
-    rs = AvroLitePushdownReader({"path": d})
+    rs = AvroLiteReader({"path": d})
     rs.pushFilters([GreaterThanOrEqual(("day",), "2005-06-23"),
                     LessThan(("day",), "2005-12-31")])
     row["blocks_opened_string"] = sum(
@@ -387,15 +389,15 @@ def run_avrolite_zonemap_leg(spark) -> dict:
             spark.read.format("avrolite").option("path", d).load()
             .where("id >= 200000 and id < 220000").count())
         row["t_pruned_read"] = round(time.monotonic() - t0, 3)
+        t0 = time.monotonic()
+        row["rows_full_read"] = (
+            spark.read.format("avrolite").option("path", d).load()
+            .where("id % 500000 >= 200000 and id % 500000 < 220000")
+            .count())
+        row["t_full_read"] = round(time.monotonic() - t0, 3)
     finally:
         spark.conf.set("spark.sql.python.filterPushdown.enabled",
-                       "false")  # the full-read twin needs it OFF
-    t0 = time.monotonic()
-    row["rows_full_read"] = (
-        spark.read.format("avrolite").option("path", d).load()
-        .where("id >= 200000 and id < 220000").count())
-    row["t_full_read"] = round(time.monotonic() - t0, 3)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", prior)
+                       prior)
     row["pruned_ok"] = (
         row["blocks_opened_numeric"] <= 3
         and row["blocks_opened_string"] <= blocks_total // 4)
@@ -578,9 +580,7 @@ def run_txlog_stream_leg(spark) -> dict:
     the executor-parallel txlogstream source at x10/x100. The drain
     runs a real readStream -> foreachBatch(count) query (count is an
     executor-side aggregate, so the measurement itself moves no rows
-    to the driver) over a table of range-partitioned commits; the
-    x10 tier also drains through the Simple fallback reader
-    (use_simple_reader) to record the parallel/driver-pump ratio.
+    to the driver) over a table of range-partitioned commits.
     exp_10_100 is wall time over a 10x table — expect <= ~1 with
     the streaming fixed overhead damping it; the property under
     regression watch is that it STAYS put (a jump means rows
@@ -594,12 +594,10 @@ def run_txlog_stream_leg(spark) -> dict:
     spark.dataSource.register(TxLogStreamDataSource)
     row: dict = {}
 
-    def drain(root, simple=False):
+    def drain(root):
         counts = []
         rdr = (spark.readStream.format("txlogstream")
                .option("path", root))
-        if simple:
-            rdr = rdr.option("use_simple_reader", "true")
         t0 = time.monotonic()
         q = (rdr.load().writeStream
              .foreachBatch(lambda df, bid: counts.append(df.count()))
@@ -629,14 +627,6 @@ def run_txlog_stream_leg(spark) -> dict:
         row[f"t_{k}"] = t
         row[f"rows_{k}"] = got
         row[f"rows_per_s_{k}"] = round(got / t, 1)
-        # the simple-reader comparison runs at BOTH tiers: at x10
-        # everything is startup-overhead-dominated (~1.0 ratio);
-        # x100 is where 1.5M rows through the driver pump vs the
-        # executor path actually separates
-        ts, gots = drain(root, simple=True)
-        assert gots == n_rows
-        row[f"t_simple_{k}"] = ts
-        row[f"speedup_vs_simple_{k}"] = round(ts / t, 2)
     row["exp_10_100"] = round(
         math.log10(row["t_x100"] / row["t_x10"]), 3)
     # r15 CAPPED path (VERDICT r14 #6): drain the x10 tier again
@@ -989,10 +979,8 @@ def run_avrolite_stream_leg(spark) -> dict:
     """E21's executor-parallel stream reader measured the way D27's
     was (txlog_stream_drain): rows/s through a readStream ->
     foreachBatch(count) drain of a landing-zone directory at
-    x10/x100, with the x-tier Simple-reader drains recording the
-    parallel/driver-pump ratio. Expect the same shape: ~flat
-    exponent (startup-dominated at these sizes) and a ratio that
-    separates at x100 where the driver pump pays per-row Python."""
+    x10/x100. Expect the same shape: a ~flat exponent
+    (startup-dominated at these sizes)."""
     from pyspark.sql import functions as F
 
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
@@ -1001,12 +989,10 @@ def run_avrolite_stream_leg(spark) -> dict:
     register_avrolite(spark)
     row: dict = {}
 
-    def drain(path, simple=False):
+    def drain(path):
         counts = []
         rdr = (spark.readStream.format("avrolite")
                .option("path", path))
-        if simple:
-            rdr = rdr.option("use_simple_reader", "true")
         t0 = time.monotonic()
         q = (rdr.load().writeStream
              .foreachBatch(lambda df, bid: counts.append(df.count()))
@@ -1038,10 +1024,6 @@ def run_avrolite_stream_leg(spark) -> dict:
         assert got == n_rows, (got, n_rows)
         row[f"t_{k}"] = t
         row[f"rows_per_s_{k}"] = round(got / t, 1)
-        ts, gots = drain(path, simple=True)
-        assert gots == n_rows
-        row[f"t_simple_{k}"] = ts
-        row[f"speedup_vs_simple_{k}"] = round(ts / t, 2)
     row["exp_10_100"] = round(
         math.log10(row["t_x100"] / row["t_x10"]), 3)
     return row

@@ -206,8 +206,8 @@ def test_clone_and_optimize_carry_mapping(spark, table, tmp_path):
 
 
 def test_stream_readers_under_mapping(spark, table):
-    """The parallel reader translates via the bound mapping; the
-    simple fallback declares non-support."""
+    """The stream reader translates physical names via the mapping
+    bound when it opened."""
     T.rename_column(table, "v", "value", checkpoint_every=0)
     T.append(spark.range(20, 22).select(
         "id", (F.col("id") * 2).alias("value")), table,
@@ -228,12 +228,6 @@ def test_stream_readers_under_mapping(spark, table):
     q.awaitTermination(120)
     assert sorted(r.value for r in got) == sorted(
         [i * 2 for i in range(22)])
-    with pytest.raises(Exception, match="column-mapped|colmap|rename"):
-        (spark.readStream.format("txlogstream")
-         .option("path", table)
-         .option("use_simple_reader", "true").load()
-         .writeStream.format("noop")
-         .trigger(availableNow=True).start().awaitTermination(60))
 
 
 # ------------------------------------------------------------------ #

@@ -809,6 +809,26 @@ def test_two_level_assign_plan_shape(spark, sf_dir):
     assert final.count("Exchange hashpartitioning") == 2
 
 
+def test_mat_from_arrow_shapes():
+    """Arrow list column -> (rows, dim) float64 matrix, chunked or
+    not; an empty column (no dim to infer) is a (0, 0) matrix
+    instead of a reshape error."""
+    import numpy as np
+    import pyarrow as pa
+
+    from gcp_data_engineering_workshop_spark.functions.vectorfns import (
+        mat_from_arrow)
+
+    col = pa.chunked_array([pa.array([[1.0, 2.0]], pa.list_(pa.float32())),
+                            pa.array([[3.0, 4.0]], pa.list_(pa.float32()))])
+    m = mat_from_arrow(col)
+    assert m.dtype == np.float64 and m.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    for empty in (pa.array([], pa.list_(pa.float64())),
+                  pa.chunked_array([], pa.list_(pa.float64()))):
+        e = mat_from_arrow(empty)
+        assert e.shape == (0, 0) and e.dtype == np.float64
+
+
 # ------------------------------------------------------------------ #
 # r11: two-level routing through the kNN-graph / IVF-query paths and
 # the empty-coarse-block routing guard (ADVICE r11)

@@ -689,7 +689,7 @@ def test_avrolite_filter_pushdown_prunes_blocks(spark, tmp_path):
     from pyspark.sql.datasource import GreaterThanOrEqual
 
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
-        AvroLiteReader, AvroLitePushdownReader)
+        AvroLiteReader)
 
     _avro_register(spark)
     d = str(tmp_path / "avrostats")
@@ -700,7 +700,7 @@ def test_avrolite_filter_pushdown_prunes_blocks(spark, tmp_path):
     # (b) planner-level: pushed range keeps only matching blocks
     full = AvroLiteReader({"path": d})
     n_all = sum(len(p.value[1]) for p in full.partitions())
-    pruned = AvroLitePushdownReader({"path": d})
+    pruned = AvroLiteReader({"path": d})
     assert list(pruned.pushFilters(
         [GreaterThanOrEqual(("id",), 900)])) != []
     n_kept = sum(len(p.value[1]) for p in pruned.partitions())
@@ -719,12 +719,45 @@ def test_avrolite_filter_pushdown_prunes_blocks(spark, tmp_path):
                        _prev_pd)
 
 
+def test_avrolite_format_read_prunes_blocks(spark, tmp_path):
+    """Zone-map pruning happens through format("avrolite") itself,
+    not only on a hand-built reader: Spark calls reader() in a
+    planner worker with no active session, so the source must not
+    gate pushdown on a session-conf probe. With one partition per
+    block (partition_bytes=1), a predicate that only the last of 10
+    blocks can match plans ONE partition, with the same rows an
+    unpushable predicate returns over all 10."""
+    _avro_register(spark)
+    d = str(tmp_path / "avroplan")
+    (spark.range(1000).orderBy("id").coalesce(1)
+     .write.format("avrolite").option("path", d)
+     .option("records_per_block", "100").mode("append").save())
+    _prev_pd = spark.conf.get(
+        "spark.sql.python.filterPushdown.enabled", "true")
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    try:
+        src = (spark.read.format("avrolite").option("path", d)
+               .option("partition_bytes", "1").load())
+        assert src.rdd.getNumPartitions() == 10
+        pruned = src.where("id >= 900")
+        # Catalyst folds `id + 0` back to `id`; `%` it cannot
+        unpushed = src.where("id % 1000 >= 900")
+        assert pruned.rdd.getNumPartitions() == 1
+        assert unpushed.rdd.getNumPartitions() == 10
+        rows = sorted(r.id for r in pruned.collect())
+        assert rows == sorted(r.id for r in unpushed.collect())
+        assert rows == list(range(900, 1000))
+    finally:
+        spark.conf.set("spark.sql.python.filterPushdown.enabled",
+                       _prev_pd)
+
+
 def test_avrolite_pruning_is_conservative_on_nulls(spark, tmp_path):
     """An all-null block for the filtered field is provably
     unmatchable by a range predicate and may be pruned; rows with
     values stay exact."""
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
-        AvroLitePushdownReader)
+        AvroLiteReader)
     from pyspark.sql.datasource import EqualTo
 
     _avro_register(spark)
@@ -735,7 +768,7 @@ def test_avrolite_pruning_is_conservative_on_nulls(spark, tmp_path):
     (df.orderBy("id").coalesce(1).write.format("avrolite")
      .option("path", d).option("records_per_block", "100")
      .mode("append").save())
-    r = AvroLitePushdownReader({"path": d})
+    r = AvroLiteReader({"path": d})
     r.pushFilters([EqualTo(("v",), 150)])
     kept = sum(len(p.value[1]) for p in r.partitions())
     assert kept == 1  # the all-null block is gone
@@ -762,7 +795,7 @@ def test_avrolite_zone_maps_never_prune_nan_blocks(spark, tmp_path):
     from pyspark.sql.datasource import GreaterThan
 
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
-        AvroLitePushdownReader)
+        AvroLiteReader)
 
     _avro_register(spark)
     d = str(tmp_path / "avronan")
@@ -774,7 +807,7 @@ def test_avrolite_zone_maps_never_prune_nan_blocks(spark, tmp_path):
      .option("path", d).option("records_per_block", "100")
      .mode("append").save())
     # planner level: the NaN block survives the pushed range filter
-    r = AvroLitePushdownReader({"path": d})
+    r = AvroLiteReader({"path": d})
     r.pushFilters([GreaterThan(("v",), 0.11)])
     kept = sum(len(p.value[1]) for p in r.partitions())
     assert kept == 2  # both blocks: block 1 by range, block 0 by NaN
@@ -803,7 +836,7 @@ def test_avrolite_string_zone_maps_prune_blocks(spark, tmp_path):
                                         LessThan)
 
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
-        AvroLiteReader, AvroLitePushdownReader)
+        AvroLiteReader)
 
     _avro_register(spark)
     d = str(tmp_path / "avrostr")
@@ -820,11 +853,11 @@ def test_avrolite_string_zone_maps_prune_blocks(spark, tmp_path):
                 for p in AvroLiteReader({"path": d}).partitions())
     assert n_all == 4
     # equality on a single date hits exactly one block
-    r = AvroLitePushdownReader({"path": d})
+    r = AvroLiteReader({"path": d})
     r.pushFilters([EqualTo(("day",), "2024-06-15")])
     assert sum(len(p.value[1]) for p in r.partitions()) == 1
     # a range straddling one block boundary keeps two
-    r2 = AvroLitePushdownReader({"path": d})
+    r2 = AvroLiteReader({"path": d})
     r2.pushFilters([GreaterThanOrEqual(("day",), "2024-04-01"),
                     LessThan(("day",), "2024-04-20")])
     assert sum(len(p.value[1]) for p in r2.partitions()) == 2
@@ -852,7 +885,7 @@ def test_avrolite_string_zone_maps_conservative_on_nulls_and_types(
     from pyspark.sql.datasource import EqualTo, GreaterThan
 
     from gcp_data_engineering_workshop_spark.sources.avrolite import (
-        AvroLitePushdownReader)
+        AvroLiteReader)
 
     _avro_register(spark)
     d = str(tmp_path / "avrostrnull")
@@ -864,11 +897,11 @@ def test_avrolite_string_zone_maps_conservative_on_nulls_and_types(
     (df.orderBy("id").coalesce(1).write.format("avrolite")
      .option("path", d).option("records_per_block", "100")
      .mode("append").save())
-    r = AvroLitePushdownReader({"path": d})
+    r = AvroLiteReader({"path": d})
     r.pushFilters([EqualTo(("name",), "k150")])
     assert sum(len(p.value[1]) for p in r.partitions()) == 1
     # cross-type literal: keep every value-bearing block
-    r2 = AvroLitePushdownReader({"path": d})
+    r2 = AvroLiteReader({"path": d})
     r2.pushFilters([GreaterThan(("name",), 42)])
     assert sum(len(p.value[1]) for p in r2.partitions()) == 1
     _prev_pd = spark.conf.get(
@@ -885,11 +918,11 @@ def test_avrolite_string_zone_maps_conservative_on_nulls_and_types(
 
 def test_avrolite_parallel_stream_reader_default_and_parity(
         spark, tmp_path):
-    """E21's stream reader is EXECUTOR-PARALLEL by default (r11,
-    the D27 upgrade applied to the landing-zone tail): the driver
-    plans block groups, executors decode them. Parity: the same
-    directory drained through the parallel reader and the Simple
-    fallback yields identical rows; the planner splits a small
+    """E21's stream reader is EXECUTOR-PARALLEL (the D27 design
+    applied to the landing-zone tail): the driver plans block
+    groups, executors decode them. Parity: the directory drained
+    through the stream yields exactly the rows a batch read of the
+    same directory returns; the planner splits a small
     partition_bytes target into multiple tasks."""
     import time as _t
 
@@ -907,21 +940,17 @@ def test_avrolite_parallel_stream_reader_default_and_parity(
      .coalesce(1).write.format("avrolite").option("path", d)
      .option("records_per_block", "50").mode("append").save())
 
-    def drain(name, **opts):
-        rdr = spark.readStream.format("avrolite").option("path", d)
-        for k, v in opts.items():
-            rdr = rdr.option(k, v)
-        q = (rdr.load().writeStream.format("memory")
-             .queryName(name).outputMode("append").start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return sorted(tuple(r) for r in spark.table(name).collect())
-
-    par = drain("avro_par")
-    simple = drain("avro_simple", use_simple_reader="true")
-    assert par == simple
+    q = (spark.readStream.format("avrolite").option("path", d).load()
+         .writeStream.format("memory")
+         .queryName("avro_par").outputMode("append").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    par = sorted(tuple(r) for r in spark.table("avro_par").collect())
+    batch = sorted(tuple(r) for r in spark.read.format("avrolite")
+                   .option("path", d).load().collect())
+    assert par == batch
     assert len(par) == 600
     # planner: tiny pack target -> multiple block-group partitions
     r = AvroLiteParallelStreamReader({"path": d,

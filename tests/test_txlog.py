@@ -16,6 +16,17 @@ def _ids(df):
     return sorted(r.id for r in df.collect())
 
 
+def _stream_rows(rdr, start: int, end: int) -> list[tuple]:
+    """Rows of the stream window (start, end] through the stream
+    reader's own planner and executor path: partitions() then
+    read() on every planned file group."""
+    rows = []
+    for part in rdr.partitions({"v": start}, {"v": end}):
+        for batch in rdr.read(part):
+            rows += [tuple(r.values()) for r in batch.to_pylist()]
+    return rows
+
+
 def test_append_overwrite_read_and_time_travel(spark, tmp_path):
     root = str(tmp_path / "tbl")
     v1 = T.append(spark.range(10), root)
@@ -604,7 +615,7 @@ def test_txlog_stream_source_skips_optimize_rejects_merge(
     must NOT re-emit compacted rows); merge commits kill the stream
     unless ignore_changes opts into the apply-by-key contract."""
     from gcp_data_engineering_workshop_spark.sources.txlog import (
-        TxLogStreamDataSource, TxLogStreamReader)
+        TxLogParallelStreamReader, TxLogStreamDataSource)
 
     root = str(tmp_path / "tbl")
     T.append(spark.createDataFrame([(1, "a")], "k int, v string")
@@ -628,12 +639,13 @@ def test_txlog_stream_source_skips_optimize_rejects_merge(
 
     T.merge_upsert(spark, root, spark.createDataFrame(
         [(1, "A")], "k int, v string"), "k")               # v4
-    rdr = TxLogStreamReader({"path": root})
+    st = T.read(spark, root).schema
+    rdr = TxLogParallelStreamReader({"path": root}, st)
     with pytest.raises(Exception, match="merge"):
-        rdr._rows(3, 4)
-    rdr_ok = TxLogStreamReader({"path": root,
-                                "ignore_changes": "true"})
-    got = rdr_ok._rows(3, 4)
+        _stream_rows(rdr, 3, 4)
+    rdr_ok = TxLogParallelStreamReader(
+        {"path": root, "ignore_changes": "true"}, st)
+    got = _stream_rows(rdr_ok, 3, 4)
     assert (1, "A") in got  # the update rides the feed
 
 
@@ -641,19 +653,20 @@ def test_txlog_stream_source_starting_version(spark, tmp_path):
     """starting_version skips the catch-up prefix — the consumer
     that already has the table and wants only new commits."""
     from gcp_data_engineering_workshop_spark.sources.txlog import (
-        TxLogStreamReader)
+        TxLogParallelStreamReader)
 
     root = str(tmp_path / "tbl")
     T.append(spark.range(3), root)          # v1
     T.append(spark.range(3, 5), root)       # v2
-    rdr = TxLogStreamReader({"path": root, "starting_version": "1"})
+    opts = {"path": root, "starting_version": "1"}
+    st = T.read(spark, root).schema
+    rdr = TxLogParallelStreamReader(opts, st)
     assert rdr.initialOffset() == {"v": 1}
-    rows, off = rdr.read({"v": 1})
-    assert sorted(r[0] for r in rows) == [3, 4]
-    assert off == {"v": 2}
+    assert rdr.latestOffset() == {"v": 2}
+    assert sorted(r[0] for r in _stream_rows(rdr, 1, 2)) == [3, 4]
     # replay of a planned window is verbatim (commits are immutable)
-    assert sorted(r[0] for r in rdr.readBetweenOffsets(
-        {"v": 1}, {"v": 2})) == [3, 4]
+    assert sorted(r[0] for r in _stream_rows(
+        TxLogParallelStreamReader(opts, st), 1, 2)) == [3, 4]
 
 
 def test_txlog_table_to_table_streaming_pipeline(spark, tmp_path):
@@ -962,59 +975,47 @@ def test_add_constraint_retro_validates_with_session(spark, tmp_path):
 # ------------------------------------------------------------------ #
 
 
-def test_parallel_reader_is_default_and_matches_simple(spark, tmp_path):
-    """The full-API (executor-parallel) reader is the default path
-    for format('txlogstream') and is row-for-row AND batch-for-batch
-    equal to the Simple fallback reader over the same commit
-    history (same offsets-are-versions plan, same op contract)."""
+def test_parallel_reader_matches_batch_read(spark, tmp_path):
+    """format('txlogstream') runs the executor-parallel reader and
+    streams, batch for batch, exactly the rows a batch read of the
+    same commits returns: the catch-up batch carries v1-v2, the
+    next one the commit that lands mid-stream."""
     from gcp_data_engineering_workshop_spark.sources.txlog import (
         TxLogStreamDataSource)
 
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id", "cast(id * 1.5 as double) as x",
+            "concat('s', id) as s")
+
     root = str(tmp_path / "tbl")
-    T.append(spark.range(6).selectExpr(
-        "id", "cast(id * 1.5 as double) as x",
-        "concat('s', id) as s"), root)                     # v1
-    T.append(spark.range(6, 9).selectExpr(
-        "id", "cast(id * 1.5 as double) as x",
-        "concat('s', id) as s"), root)                     # v2
+    T.append(rows(0, 6), root)                             # v1
+    T.append(rows(6, 9), root)                             # v2
     spark.dataSource.register(TxLogStreamDataSource)
+    batches = {}
+    q = (spark.readStream.format("txlogstream").option("path", root)
+         .load().writeStream
+         .foreachBatch(lambda df, bid: batches.__setitem__(
+             bid, sorted((r.id, r.x, r.s) for r in df.collect())))
+         .start())
+    try:
+        q.processAllAvailable()
+        T.append(rows(50, 53), root)                       # v3
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
-    def run(opts, name):
-        batches = {}
-        rdr = spark.readStream.format("txlogstream").option("path", root)
-        for k, v in opts.items():
-            rdr = rdr.option(k, v)
-        q = (rdr.load().writeStream
-             .foreachBatch(lambda df, bid: batches.__setitem__(
-                 bid, sorted((r.id, r.x, r.s) for r in df.collect())))
-             .start())
-        try:
-            q.processAllAvailable()
-            T.append(spark.range(50, 53).selectExpr(
-                "id", "cast(id * 1.5 as double) as x",
-                "concat('s', id) as s"), root)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return batches
+    def batch_read(version):
+        return sorted((r.id, r.x, r.s) for r in
+                      T.read(spark, root, version=version).collect())
 
-    got_full = run({}, "full")
-    # roll the extra commit back out so the simple run sees the same
-    # history shape? No: both runs see v1-v2 in batch 0; the full
-    # run added v3 (ids 50-52) which the simple run then sees in its
-    # batch 0 catch-up — compare merged row multisets per window
-    # instead: batch-for-batch for the full reader, total for both.
-    got_simple = run({"use_simple_reader": "true"}, "simple")
-    all_full = sorted(r for rows in got_full.values() for r in rows)
-    all_simple = sorted(r for rows in got_simple.values() for r in rows)
-    # second run re-committed ids 50-52 (append is not idempotent) —
-    # normalize by id set equality over the union of commits each saw
-    ids_full = [r[0] for r in all_full]
-    assert ids_full == sorted([*range(6), *range(6, 9), *range(50, 53)])
-    assert all(r[1] == r[0] * 1.5 and r[2] == f"s{r[0]}" for r in all_full)
-    ids_simple = [r[0] for r in all_simple]
-    assert ids_simple == sorted(
-        [*range(6), *range(6, 9), *range(50, 53), *range(50, 53)])
+    nonempty = [b for _bid, b in sorted(batches.items()) if b]
+    assert nonempty[0] == batch_read(2)
+    assert nonempty[1:] == [sorted(set(batch_read(3))
+                                   - set(batch_read(2)))]
+    assert sorted(r for b in nonempty for r in b) == batch_read(3)
+    assert [r[0] for r in batch_read(3)] == [
+        *range(9), *range(50, 53)]
 
 
 def test_parallel_reader_partitions_pack_and_replay(spark, tmp_path):
@@ -1105,16 +1106,6 @@ def test_stream_admission_control_caps_batches(spark, tmp_path):
     got2 = sorted(i for rows in batches2.values() for i in rows)
     assert got2 == sorted(
         i for b in range(10, 16) for i in (b * 10, b * 10 + 1))
-    # simple fallback: same cap contract (exact even across
-    # restarts — read(start) receives the committed offset)
-    from gcp_data_engineering_workshop_spark.sources.txlog import (
-        TxLogStreamReader)
-    rdr = TxLogStreamReader({"path": root,
-                             "max_versions_per_trigger": "4"})
-    rows, off = rdr.read({"v": 0})
-    assert off == {"v": 4}
-    assert sorted(r[0] for r in rows) == sorted(
-        i for b in range(4) for i in (b * 10, b * 10 + 1))
 
 
 def test_stream_bytes_admission_control(spark, tmp_path):
@@ -1297,18 +1288,19 @@ def test_stream_restore_commit_raises_unless_ignored(spark, tmp_path):
     Contract: NonAppendChange unless ignore_changes=true (same as
     merge/overwrite)."""
     from gcp_data_engineering_workshop_spark.sources.txlog import (
-        TxLogStreamReader)
+        TxLogParallelStreamReader)
 
     root = str(tmp_path / "tbl")
     T.append(spark.range(3), root)                         # v1
     T.overwrite(spark.range(10, 12), root)                 # v2
     T.restore(root, 1)                                     # v3: re-adds v1 files
-    rdr = TxLogStreamReader({"path": root})
+    st = T.read(spark, root).schema
+    rdr = TxLogParallelStreamReader({"path": root}, st)
     with pytest.raises(T.NonAppendChange, match="restore"):
-        rdr._rows(2, 3)
-    rdr_ok = TxLogStreamReader({"path": root,
-                                "ignore_changes": "true"})
-    got = sorted(r[0] for r in rdr_ok._rows(2, 3))
+        _stream_rows(rdr, 2, 3)
+    rdr_ok = TxLogParallelStreamReader(
+        {"path": root, "ignore_changes": "true"}, st)
+    got = sorted(r[0] for r in _stream_rows(rdr_ok, 2, 3))
     assert got == [0, 1, 2]  # the resurrected rows, apply-by-key
 
 
@@ -1893,11 +1885,10 @@ def test_partitioned_vacuum_reclaims_nested_files(spark, tmp_path):
 
 def test_partitioned_stream_parallel_reader_injects_columns(
         spark, tmp_path):
-    """The parallel stream reader re-materializes hive partition
-    columns executor-side from the add actions' tokens; the simple
-    (driver-side) reader declares non-support."""
+    """The stream reader re-materializes hive partition columns
+    executor-side from the add actions' tokens."""
     from gcp_data_engineering_workshop_spark.sources.txlog import (
-        TxLogStreamDataSource, TxLogStreamReader)
+        TxLogStreamDataSource)
 
     root = str(tmp_path / "tbl")
     T.append(_pdf(spark, 0, 12), root, partition_by=["p"])
@@ -1916,8 +1907,6 @@ def test_partitioned_stream_parallel_reader_injects_columns(
     assert len(rows) == 18
     assert all(r.p == r.id % 3 for r in rows)
     assert all(r.s == f"s{r.id % 2}" for r in rows)
-    with pytest.raises(ValueError, match="parallel reader"):
-        TxLogStreamReader({"path": root})
 
 
 def test_partitioned_optimize_compacts_per_partition(spark, tmp_path):
